@@ -478,17 +478,6 @@ def main() -> None:
         rec["measure_sec"] = round(time.monotonic() - t0, 1)
         extra["ann_recall"] = rec
 
-        # IVF-vs-HNSW adjudication numbers (round 6 — DESIGN_100TB.md):
-        # build/probe wall + recall for both layouts on the same fixture
-        from hybrid_sanctions_search_engine_spark.operators.hnsw import (
-            ann_design_report,
-        )
-
-        t0 = time.monotonic()
-        design = ann_design_report(spark)
-        design["measure_sec"] = round(time.monotonic() - t0, 1)
-        extra["ann_design"] = design
-
         # block-max θ-pruning effectiveness on a Zipfian corpus — the regime
         # pruning exists for (the uniform harness corpus measures ~100%
         # survival by construction; BENCH.md).  Ubiquitous + rare query:

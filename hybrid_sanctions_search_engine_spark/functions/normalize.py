@@ -308,9 +308,5 @@ def normalize_series(s: pd.Series, normalize_homoglyphs: bool = False) -> pd.Ser
     return out
 
 
-def normalize_for_ac_series(s: pd.Series) -> pd.Series:
-    return s.fillna("").map(normalize_for_ac)
-
-
 def detect_language_series(s: pd.Series) -> pd.Series:
     return s.fillna("").map(detect_language)

@@ -47,12 +47,6 @@ def smartfilter_confidence_col(text_col: Column) -> Column:
     )
 
 
-def should_process_col(
-    text_col: Column, threshold: float = DEFAULT_THRESHOLD
-) -> Column:
-    return smartfilter_confidence_col(text_col) >= threshold
-
-
 def smartfilter_oracle_sql(expr: str = "text") -> str:
     """DuckDB mirror of ``smartfilter_confidence_col``."""
     def has(p: str) -> str:

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -172,20 +171,6 @@ def strip_noise_and_tokenize(
     return result, quoted_segments
 
 
-def tokenize_series(
-    s: pd.Series,
-    *,
-    remove_stop_words: bool = True,
-    stop_words: frozenset[str] | None = None,
-) -> pd.Series:
-    """Series[str] → Series[list[str]] for use inside pandas UDFs."""
-    return s.map(
-        lambda t: strip_noise_and_tokenize(
-            t, remove_stop_words=remove_stop_words, stop_words=stop_words
-        )[0]
-    )
-
-
 # --------------------------------------------------------------------------
 # Fast index tokenizer — pure Column expressions (JVM, codegen, SQL-mirrorable)
 # --------------------------------------------------------------------------
@@ -205,11 +190,3 @@ def spark_index_tokens(col: Column) -> Column:
     """lower → split on non-letter/digit runs (Unicode classes; identical
     semantics in Java regex and DuckDB RE2) → drop empty tokens."""
     return F.filter(F.split(F.lower(col), INDEX_TOKEN_SPLIT_RE), lambda t: t != "")
-
-
-def index_tokens_oracle_sql(expr: str = "text") -> str:
-    """The DuckDB expression equivalent to ``spark_index_tokens``."""
-    return (
-        f"list_filter(regexp_split_to_array(lower({expr}), "
-        f"'[^\\p{{L}}\\p{{N}}]+'), t -> t <> '')"
-    )

@@ -11,7 +11,6 @@ clearly marked.
 
 from __future__ import annotations
 
-import pandas as pd
 
 CYR2LAT: dict[str, str] = {
     "а": "a", "б": "b", "в": "v", "г": "g", "д": "d", "е": "e", "ё": "e",
@@ -180,12 +179,3 @@ def assemble_name(tokens: list[str], roles: list[str] | None = None) -> str:
         )
 
     return " ".join(title(t) for t, _ in ordered)
-
-
-def to_latin_series(s: pd.Series) -> pd.Series:
-    return s.fillna("").map(to_latin)
-
-
-def tag_roles_series(tokens: pd.Series) -> pd.Series:
-    """Series[list[str]] → Series[list[str]] of roles."""
-    return tokens.map(lambda ts: [tag_role(t) for t in (ts or [])])

@@ -36,13 +36,6 @@ def cosine_col(a: Column, b: Column) -> Column:
     return dot_col(a, b) / (norm_col(a) * norm_col(b))
 
 
-def l2_normalize_col(a: Column) -> Column:
-    """M1: L2-normalize an array column (norm 0 → left unchanged /0-safe)."""
-    n = norm_col(a)
-    safe = F.when(n > 0, n).otherwise(F.lit(1.0))
-    return F.transform(a, lambda v: v.cast("double") / safe)
-
-
 def pseudo_embedding(text: str, dimension: int = 384) -> list[float]:
     """Deterministic byte-histogram embedding, identical to the reference's
     ``_pseudo_embedding``: histogram[(byte + idx) % dim] += 1, L2-normalized."""

@@ -18,13 +18,17 @@ read instead of 250 Spark jobs.
 
 from __future__ import annotations
 
-import itertools
-import json
 import os
 
 import numpy as np
 
-from .similarity import _LSH_TOP_BITS, lsh_signature_of
+from .similarity import (
+    lsh_band,
+    lsh_mb_band_values,
+    lsh_probe_bands,
+    lsh_signature_of,
+)
+from .vector_index import index_class
 
 
 def make_clustered_fixture(
@@ -85,12 +89,6 @@ def _pq_m_for_dim(dim: int) -> int:
     return next(mm for mm in range(max(dim // 8, 1), 0, -1) if dim % mm == 0)
 
 
-def _read_meta(index_dir: str, name: str) -> dict:
-    from ..sources.fs import fs_for
-
-    return fs_for(index_dir).read_json(os.path.join(index_dir, name))
-
-
 def brute_force_topk(x: np.ndarray, q: np.ndarray, k: int) -> np.ndarray:
     """Exact cosine top-k ids per query (rows of ``q``) — the ground truth,
     under the probes' exact tie-break (sim desc, id asc).  Full lexsort on
@@ -118,7 +116,7 @@ def ivf_recall_curve(
     index's cell assignments."""
     import pyarrow.dataset as ds
 
-    meta = _read_meta(index_dir, "_ivf_meta.json")
+    meta = index_class("ivf").read_meta(index_dir)
     cents = np.asarray(meta["centroids"], dtype=np.float64)
     tbl = ds.dataset(index_dir, format="parquet", partitioning="hive").to_table(
         columns=["vec_id", "ivf_cell"]
@@ -165,7 +163,7 @@ def ivf_pq_recall_curve(
 
     from .pq import adc_lookup_table
 
-    meta = _read_meta(index_dir, "_ivf_pq_meta.json")
+    meta = index_class("ivf_pq").read_meta(index_dir)
     cents = np.asarray(meta["centroids"], dtype=np.float64)
     books = np.asarray(meta["codebooks"], dtype=np.float64)
     m = books.shape[0]
@@ -218,7 +216,7 @@ def ivf_sq8_recall_curve(
 
     from .sq import _sq8_query_form, _sq8_scores
 
-    meta = _read_meta(index_dir, "_ivf_sq8_meta.json")
+    meta = index_class("ivf_sq8").read_meta(index_dir)
     cents = np.asarray(meta["centroids"], dtype=np.float64)
     vmin = np.asarray(meta["vmin"], dtype=np.float64)
     vmax = np.asarray(meta["vmax"], dtype=np.float64)
@@ -265,7 +263,7 @@ def lsh_recall_curve(
     written index's signatures."""
     import pyarrow.dataset as ds
 
-    meta = _read_meta(index_dir, "_lsh_meta.json")
+    meta = index_class("lsh").read_meta(index_dir)
     dim, n_planes, seed = meta["dim"], meta["n_planes"], meta["seed"]
     tbl = ds.dataset(index_dir, format="parquet", partitioning="hive").to_table(
         columns=["vec_id", "lsh_sig"]
@@ -279,15 +277,8 @@ def lsh_recall_curve(
         hits = 0
         for i in range(queries.shape[0]):
             qsig = lsh_signature_of(queries[i].tolist(), dim, n_planes, seed)
-            qband = (qsig >> (n_planes - _LSH_TOP_BITS)) & ((1 << _LSH_TOP_BITS) - 1)
-            bands = set()
-            for h in range(mh + 1):
-                for flips in itertools.combinations(range(_LSH_TOP_BITS), h):
-                    b = qband
-                    for f in flips:
-                        b ^= 1 << f
-                    bands.add(b)
-            band = (sigs >> (n_planes - _LSH_TOP_BITS)) & ((1 << _LSH_TOP_BITS) - 1)
+            bands = lsh_probe_bands(qsig, n_planes, mh)
+            band = lsh_band(sigs, n_planes)
             # popcount via byte view (numpy < 2.0 has no bitwise_count)
             xor = np.bitwise_xor(sigs, qsig)
             ham = np.unpackbits(xor.view(np.uint8).reshape(-1, 8), axis=1).sum(axis=1)
@@ -316,7 +307,7 @@ def lsh_multiband_recall_curve(
     the written index's band assignments."""
     import pyarrow.dataset as ds
 
-    meta = _read_meta(index_dir, "_lsh_mb_meta.json")
+    meta = index_class("lsh_mb").read_meta(index_dir)
     dim, n_bands, band_bits, seed = (
         meta["dim"], meta["n_bands"], meta["band_bits"], meta["seed"],
     )
@@ -334,8 +325,9 @@ def lsh_multiband_recall_curve(
                 queries[i].tolist(), dim, n_bands * band_bits, seed
             )
             mask = np.zeros(vec_ids.size, dtype=bool)
-            for bi in range(min(npb, n_bands)):
-                v = (sig >> (bi * band_bits)) & ((1 << band_bits) - 1)
+            for bi, v in enumerate(
+                lsh_mb_band_values(sig, n_bands, band_bits)[:npb]
+            ):
                 mask |= (bidx == bi) & (bval == v)
             cand = np.unique(vec_ids[mask])
             if cand.size == 0:

@@ -772,25 +772,6 @@ def _phrase_match_lucene(base, phrase_terms, slop, _within_slop):
     )
 
 
-def prefix_match_terms(
-    postings: DataFrame, prefix: str, min_len: int = 2, max_len: int = 20
-) -> DataFrame:
-    """Edge-ngram prefix semantics (analyzer min 2 / max 20 grams,
-    ``elasticsearch_index_manager.py:296-315``): all index terms extending
-    ``prefix``. Rather than materializing edge-ngrams at index time (×10
-    index bloat at web scale), the same result comes from a range predicate
-    on the term dictionary — sargable on a term-sorted index."""
-    p = prefix.lower()
-    if len(p) < min_len:
-        return postings.where(F.lit(False)).select("term").distinct()
-    return (
-        postings.where(F.col("term").startswith(p) & (F.length("term") >= min_len))
-        .where(F.length(F.lit(p)) <= max_len)
-        .select("term")
-        .distinct()
-    )
-
-
 def complete_prefix(
     dictionary: DataFrame,
     prefix: str,

@@ -1,11 +1,11 @@
-"""Result fusion, dedup and post-processing — the reference's combine stage.
+"""Result dedup and overlay helpers — the reference's combine stage.
 
-From-scratch Spark expression of ``_combine_results`` / ``_deduplicate_and_
-rerank`` / ``_process_results``
-(``/root/reference/src/ai_service/layers/search/hybrid_search_service.py:
-1091-1291``): weighted score fusion (AC 0.6 / vector 0.4, +0.1 shared-hit
-bonus, +0.05 metadata bonus), rank-deterministic keep-best dedup, and the
-threshold / entity-type / metadata filters.
+The weighted score fusion itself (``_combine_results``: AC 0.6 / vector
+0.4, +0.1 shared-hit bonus) and the ``_process_results`` threshold run
+driver-side over k-bounded rows in ``plans.hybrid.decide_and_fuse``.  This
+module keeps the DataFrame-level pieces of that stage
+(``hybrid_search_service.py:1091-1291``): rank-deterministic keep-best
+dedup, the delta-overlay union and per-query confidence normalization.
 """
 
 from __future__ import annotations
@@ -13,43 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-AC_WEIGHT = 0.6
-VECTOR_WEIGHT = 0.4
 SHARED_HIT_BONUS = 0.1
-METADATA_BONUS = 0.05
-
-
-def combine_results(
-    ac: DataFrame,
-    vector: DataFrame,
-    ac_weight: float = AC_WEIGHT,
-    vector_weight: float = VECTOR_WEIGHT,
-    shared_bonus: float = SHARED_HIT_BONUS,
-    key: str = "doc_id",
-) -> DataFrame:
-    """Fuse (doc_id, score) sets: weighted sum + shared-hit bonus.
-
-    When the AC side is empty the vector weight escalates to 1.0, mirroring
-    the reference's no-AC fallback (``hybrid_search_service.py:1123-1186``).
-    Full-outer join on the key — both sides already carry one row per doc.
-    """
-    ac_scores = ac.select(key, F.col("score").alias("ac_score"))
-    vec_scores = vector.select(key, F.col("score").alias("vec_score"))
-    if ac.isEmpty():
-        vector_weight = 1.0
-    fused = (
-        ac_scores.join(vec_scores, key, "full_outer")
-        .withColumn(
-            "score",
-            F.coalesce(F.col("ac_score"), F.lit(0.0)) * ac_weight
-            + F.coalesce(F.col("vec_score"), F.lit(0.0)) * vector_weight
-            + F.when(
-                F.col("ac_score").isNotNull() & F.col("vec_score").isNotNull(),
-                shared_bonus,
-            ).otherwise(0.0),
-        )
-    )
-    return fused.select(key, "score", "ac_score", "vec_score")
 
 
 def dedup_keep_best(
@@ -71,23 +35,6 @@ def topk(
 ) -> DataFrame:
     """Deterministic global top-k → TakeOrderedAndProject."""
     return df.orderBy(F.desc(score_col), F.asc(key)).limit(k)
-
-
-def process_results(
-    df: DataFrame,
-    threshold: float = 0.7,
-    entity_types: list[str] | None = None,
-    metadata_filters: dict[str, str] | None = None,
-    score_col: str = "score",
-) -> DataFrame:
-    """P2 threshold, P3 entity-type filter, P4 metadata equality filters."""
-    out = df.where(F.col(score_col) >= threshold)
-    if entity_types:
-        out = out.where(F.col("entity_type").isin(entity_types))
-    if metadata_filters:
-        for col, value in metadata_filters.items():
-            out = out.where(F.col(col) == value)
-    return out
 
 
 def overlay_union(

@@ -341,28 +341,19 @@ def extract_anchors(query_text: str) -> tuple[list[str], list[str]]:
     return dates, ids
 
 
-def anchor_boost(
-    candidates: DataFrame,
-    query_text: str,
-    text_col: str = "text",
-    score_col: str = "score",
-    dob_boost: float = 1.3,
-    id_boost: float = 1.2,
-) -> DataFrame:
-    """×1.3 when a query date appears in the candidate, ×1.2 for an ID."""
-    dates, ids = extract_anchors(query_text)
-    score = F.col(score_col)
-    if dates:
-        has_date = F.lit(False)
-        for d in dates:
-            has_date = has_date | F.col(text_col).contains(d)
-        score = F.when(has_date, score * dob_boost).otherwise(score)
-    if ids:
-        has_id = F.lit(False)
-        for i in ids:
-            has_id = has_id | F.col(text_col).contains(i)
-        score = F.when(has_id, score * id_boost).otherwise(score)
-    return candidates.withColumn(score_col, score)
+def anchor_mult(dates: Column, ids: Column, text_col: str = "text") -> Column:
+    """L10 anchor multiplier for a vector-fallback hit: ×1.2 when any query
+    date appears in the candidate text, ×1.1 when any query ID does
+    (``hybrid_search_service.py:1256-1260``); empty anchor arrays give 1.0.
+    ``dates`` / ``ids`` are array<string> Columns — literals for one query,
+    per-row query columns in the batched ladder — so both ladders evaluate
+    the same expression in-cluster over the k-bounded hits."""
+    text = F.col(text_col)
+    return F.when(
+        F.exists(dates, lambda d: text.contains(d)), F.lit(1.2)
+    ).otherwise(F.lit(1.0)) * F.when(
+        F.exists(ids, lambda i: text.contains(i)), F.lit(1.1)
+    ).otherwise(F.lit(1.0))
 
 
 # ---------------------------------------------------------------------------

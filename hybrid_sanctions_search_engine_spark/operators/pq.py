@@ -43,15 +43,12 @@ partition value already in the pruned scan — no extra IO).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.fs import fs_for
-from .similarity import knn_bruteforce, train_ivf_centroids, assign_ivf_cells
+from .similarity import knn_bruteforce, train_ivf_centroids
 
 
 def _normalized(x: np.ndarray) -> np.ndarray:
@@ -264,6 +261,8 @@ def write_ivf_pq_index(
     ``(id, pq_code, embedding)`` + centroid/codebook metadata.  Probes
     prune partitions (IVF), ADC-scan the byte codes, and re-rank survivors
     exactly from the vector column of the same pruned partitions."""
+    from .vector_index import IvfPqIndex
+
     cents = train_ivf_centroids(
         embeddings, n_centroids, sample, iters, vec_col=vec_col, id_col=id_col
     )
@@ -271,18 +270,7 @@ def write_ivf_pq_index(
         embeddings, m, nbits, sample, iters, vec_col=vec_col, id_col=id_col,
         centroids=cents,
     )
-    coded = encode_pq(
-        assign_ivf_cells(embeddings, cents, vec_col=vec_col), books, vec_col,
-        centroids=cents,
-    )
-    (
-        coded.repartition("ivf_cell")
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(path)
-    )
-    fs_for(path).commit_json(
-        os.path.join(path, "_ivf_pq_meta.json"),
+    IvfPqIndex(
         {
             "centroids": cents.tolist(),
             "codebooks": books.tolist(),
@@ -290,24 +278,16 @@ def write_ivf_pq_index(
             "m": int(m),
             "nbits": int(nbits),
             "residual": True,
-        },
-    )
+        }
+    ).write(embeddings, path, vec_col=vec_col)
     return cents, books
 
 
 def load_ivf_pq_index(spark, path: str) -> tuple[DataFrame, np.ndarray, np.ndarray]:
-    meta = fs_for(path).read_json(os.path.join(path, "_ivf_pq_meta.json"))
-    if not meta.get("residual"):
-        # codes quantizing raw vectors would silently mis-rank under the
-        # residual ADC offsets — refuse rather than serve wrong candidates
-        raise ValueError(
-            "pre-residual ivf_pq index format; rebuild with write_ivf_pq_index"
-        )
-    return (
-        spark.read.parquet(path),
-        np.asarray(meta["centroids"], dtype=np.float64),
-        np.asarray(meta["codebooks"], dtype=np.float64),
-    )
+    from .vector_index import IvfPqIndex
+
+    ix = IvfPqIndex.load(spark, path)
+    return ix.df, ix.centroids, ix.codebooks
 
 
 def knn_ivf_pq_probe(

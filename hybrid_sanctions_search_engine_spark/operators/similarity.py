@@ -18,11 +18,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_col
-from ..sources.fs import fs_for
 
 
 def cosine_to_query_udf(query_vec: list[float]):
@@ -380,32 +379,22 @@ def write_ivf_index(
     + centroid metadata.  A probe then reads only ``n_probe`` partition
     directories (PartitionFilters) instead of filtering a full scan — the
     IVF scale path the round-1 version only promised in a docstring."""
-    import os
+    from .vector_index import IvfIndex
 
     cents = train_ivf_centroids(
         embeddings, n_centroids, sample, iters, vec_col=vec_col, id_col=id_col
     )
-    with_cell = assign_ivf_cells(embeddings, cents, vec_col=vec_col)
-    (
-        with_cell.repartition("ivf_cell")
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(path)
-    )
-    # meta goes through fs_for like the index manifests, so non-local
-    # index paths (s3/hdfs) work end-to-end (review finding, round 5)
-    fs_for(path).commit_json(
-        os.path.join(path, "_ivf_meta.json"),
-        {"centroids": cents.tolist(), "dim": int(cents.shape[1])},
-    )
+    IvfIndex(
+        {"centroids": cents.tolist(), "dim": int(cents.shape[1])}
+    ).write(embeddings, path, vec_col=vec_col)
     return cents
 
 
 def load_ivf_index(spark, path: str) -> tuple[DataFrame, np.ndarray]:
-    import os
+    from .vector_index import IvfIndex
 
-    meta = fs_for(path).read_json(os.path.join(path, "_ivf_meta.json"))
-    return spark.read.parquet(path), np.asarray(meta["centroids"], dtype=np.float64)
+    ix = IvfIndex.load(spark, path)
+    return ix.df, ix.centroids
 
 
 def knn_ivf_probe(
@@ -570,6 +559,72 @@ def merge_local_topk(
 _LSH_TOP_BITS = 8
 
 
+def _sig_bits(sig, shift: int, width: int):
+    """Bits ``[shift, shift + width)`` of an LSH signature.  ``sig`` may be
+    a python int (a query), a numpy array (recall replays) or a Column (the
+    stored partition value), so each layout's band math is written once."""
+    mask = (1 << width) - 1
+    if isinstance(sig, Column):
+        return F.shiftrightunsigned(sig, shift).bitwiseAND(F.lit(mask)).cast("int")
+    return (sig >> shift) & mask
+
+
+def lsh_band(sig, n_planes: int):
+    """``write_lsh_index`` band: the top ``_LSH_TOP_BITS`` signature bits."""
+    return _sig_bits(sig, n_planes - _LSH_TOP_BITS, _LSH_TOP_BITS)
+
+
+def lsh_probe_bands(qsig: int, n_planes: int, max_hamming: int) -> set[int]:
+    """Every band value within ``max_hamming`` bits of the query's band —
+    Σ C(8, i), i ≤ h directories (37/256 at h = 2)."""
+    import itertools
+
+    qband = lsh_band(qsig, n_planes)
+    bands = set()
+    for h in range(max_hamming + 1):
+        for flips in itertools.combinations(range(_LSH_TOP_BITS), h):
+            b = qband
+            for f in flips:
+                b ^= 1 << f
+            bands.add(b)
+    return bands
+
+
+def lsh_mb_band_values(sig, n_bands: int, band_bits: int) -> list:
+    """``write_lsh_multiband_index`` bands: the signature split into
+    ``n_bands`` consecutive ``band_bits``-bit values, band 0 lowest."""
+    return [_sig_bits(sig, i * band_bits, band_bits) for i in range(n_bands)]
+
+
+def _cosine_topk_many(
+    candidates: DataFrame,
+    qvecs: dict[int, list[float]],
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Per-query exact top-k over (query_id, id, embedding) candidate rows.
+
+    Arrow cosine at EVERY dim: a batched probe scores |queries| ×
+    candidate pairs (~370k at 960k docs × 34 queries), and the interpreted
+    HOF ``cosine_col`` walks each pair's arrays three times (dot + both
+    norms) in Catalyst eval — ~6 s of the round-5 profile; the numpy batch
+    UDF does one gemv per query.  The query matrix rides in the UDF
+    closure keyed by query_id (``cosine_vs_queries_udf``) instead of a
+    per-row qvec join column — half the Arrow traffic."""
+    from pyspark.sql import Window
+
+    cos = cosine_vs_queries_udf(qvecs)(F.col(vec_col), F.col("query_id"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
+    return (
+        candidates.withColumn("cos_sim", cos)
+        .select("query_id", id_col, "cos_sim")
+        .withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= k)
+        .drop("_rn")
+    )
+
+
 def write_lsh_index(
     embeddings: DataFrame,
     path: str,
@@ -582,21 +637,10 @@ def write_lsh_index(
     bits.  Any candidate within total Hamming ≤ h of the query is within
     Hamming ≤ h in the band too, so a probe reads only the Σ C(8,i), i≤h
     matching band directories (37/256 at h=2) — partition-pruned multi-probe."""
-    import os
+    from .vector_index import LshIndex
 
-    with_sig = add_lsh_signature(embeddings, dim, n_planes, seed, vec_col)
-    banded = with_sig.withColumn(
-        "lsh_band",
-        F.shiftrightunsigned(F.col("lsh_sig"), n_planes - _LSH_TOP_BITS)
-        .bitwiseAND(F.lit((1 << _LSH_TOP_BITS) - 1))
-        .cast("int"),
-    )
-    banded.repartition("lsh_band").write.mode("overwrite").partitionBy(
-        "lsh_band"
-    ).parquet(path)
-    fs_for(path).commit_json(
-        os.path.join(path, "_lsh_meta.json"),
-        {"dim": dim, "n_planes": n_planes, "seed": seed},
+    LshIndex({"dim": dim, "n_planes": n_planes, "seed": seed}).write(
+        embeddings, path, vec_col=vec_col
     )
 
 
@@ -615,20 +659,12 @@ def knn_lsh_probe(
     to those directories, then exact-signature Hamming filter + cosine.
     ``df``: pre-loaded (typically cached) index DataFrame — a standing
     server passes its persisted handle instead of re-reading parquet."""
-    import itertools
-    import os
+    from .vector_index import LshIndex
 
-    meta = fs_for(path).read_json(os.path.join(path, "_lsh_meta.json"))
+    meta = LshIndex.read_meta(path)
     n_planes = meta["n_planes"]
     qsig = lsh_signature_of(query_vec, meta["dim"], n_planes, meta["seed"])
-    qband = (qsig >> (n_planes - _LSH_TOP_BITS)) & ((1 << _LSH_TOP_BITS) - 1)
-    bands = set()
-    for h in range(max_hamming + 1):
-        for flips in itertools.combinations(range(_LSH_TOP_BITS), h):
-            b = qband
-            for f in flips:
-                b ^= 1 << f
-            bands.add(b)
+    bands = lsh_probe_bands(qsig, n_planes, max_hamming)
     if df is None:
         df = spark.read.parquet(path)
     candidates = df.where(F.col("lsh_band").isin(sorted(bands))).where(
@@ -639,6 +675,50 @@ def knn_lsh_probe(
     # search() and search_many() score ANN hits identically
     return knn_bruteforce(candidates, query_vec, k, id_col, vec_col,
                           arrow=True)
+
+
+def knn_lsh_probe_many(
+    spark,
+    path: str,
+    queries: list[tuple[int, list[float]]],
+    k: int = 10,
+    max_hamming: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    df: DataFrame | None = None,
+    meta: dict | None = None,
+) -> DataFrame:
+    """Batched ``knn_lsh_probe`` → lazy (query_id, id, cos_sim), per-query
+    top-k under (cos desc, id asc).  A static ``lsh_band IN (...)``
+    prefilter prunes the scan to the union of all queries' band
+    directories; a broadcast (query_id, band, qsig) join then applies each
+    query's own bands and full-signature Hamming bound exactly.  ``meta``:
+    the layout meta already read by ``vector_index.LshIndex`` (read from
+    ``path`` when omitted)."""
+    from .vector_index import LshIndex
+
+    meta = meta if meta is not None else LshIndex.read_meta(path)
+    if df is None:
+        df = spark.read.parquet(path)
+    n_planes = meta["n_planes"]
+    sigs, bands = {}, {}
+    for q, v in queries:
+        sigs[q] = lsh_signature_of(v, meta["dim"], n_planes, meta["seed"])
+        bands[q] = lsh_probe_bands(sigs[q], n_planes, max_hamming)
+    union_bands = sorted({b for bs in bands.values() for b in bs})
+    banddf = spark.createDataFrame(
+        [(q, b, sigs[q]) for q, bs in bands.items() for b in bs],
+        "query_id long, lsh_band int, qsig long",
+    )
+    candidates = (
+        df.where(F.col("lsh_band").isin(union_bands))
+        .join(F.broadcast(banddf), "lsh_band")
+        .where(
+            F.bit_count(F.col("lsh_sig").bitwiseXOR(F.col("qsig")))
+            <= max_hamming
+        )
+    )
+    return _cosine_topk_many(candidates, dict(queries), k, id_col, vec_col)
 
 
 def write_lsh_multiband_index(
@@ -666,37 +746,11 @@ def write_lsh_multiband_index(
     each holding ~n/2^band_bits rows.  The ×n_bands storage is the
     standard LSH trade (every bucket stores its members); the embedding
     rides along so the exact rerank needs no join back."""
-    import os
+    from .vector_index import LshMultibandIndex
 
-    with_sig = add_lsh_signature(
-        embeddings, dim, n_bands * band_bits, seed, vec_col
-    )
-    bands = F.array(
-        *[
-            F.shiftrightunsigned(F.col("lsh_sig"), i * band_bits)
-            .bitwiseAND(F.lit((1 << band_bits) - 1))
-            .cast("int")
-            for i in range(n_bands)
-        ]
-    )
-    exploded = (
-        with_sig.withColumn("_bands", bands)
-        .select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.posexplode("_bands").alias("lsh_band_idx", "lsh_band_val"),
-        )
-    )
-    (
-        exploded.repartition("lsh_band_idx", "lsh_band_val")
-        .write.mode("overwrite")
-        .partitionBy("lsh_band_idx", "lsh_band_val")
-        .parquet(path)
-    )
-    fs_for(path).commit_json(
-        os.path.join(path, "_lsh_mb_meta.json"),
-        {"dim": dim, "n_bands": n_bands, "band_bits": band_bits, "seed": seed},
-    )
+    LshMultibandIndex(
+        {"dim": dim, "n_bands": n_bands, "band_bits": band_bits, "seed": seed}
+    ).write(embeddings, path, vec_col=vec_col, id_col=id_col)
 
 
 def knn_lsh_multiband_probe(
@@ -714,9 +768,9 @@ def knn_lsh_multiband_probe(
     (recall dial: fewer bands probed = faster, lower recall), candidates
     dedup by id, exact cosine reranks.  ``df``: pre-loaded (typically
     cached) index DataFrame from a standing server."""
-    import os
+    from .vector_index import LshMultibandIndex
 
-    meta = fs_for(path).read_json(os.path.join(path, "_lsh_mb_meta.json"))
+    meta = LshMultibandIndex.read_meta(path)
     n_bands, band_bits = meta["n_bands"], meta["band_bits"]
     if n_probe_bands is None:
         n_probe_bands = n_bands
@@ -726,8 +780,9 @@ def knn_lsh_multiband_probe(
     if df is None:
         df = spark.read.parquet(path)
     cond = None
-    for i in range(min(n_probe_bands, n_bands)):
-        v = (sig >> (i * band_bits)) & ((1 << band_bits) - 1)
+    for i, v in enumerate(
+        lsh_mb_band_values(sig, n_bands, band_bits)[:n_probe_bands]
+    ):
         c = (F.col("lsh_band_idx") == i) & (F.col("lsh_band_val") == v)
         cond = c if cond is None else (cond | c)
     candidates = (
@@ -740,6 +795,52 @@ def knn_lsh_multiband_probe(
     # search() and search_many() score ANN hits identically
     return knn_bruteforce(candidates, query_vec, k, id_col, vec_col,
                           arrow=True)
+
+
+def knn_lsh_multiband_probe_many(
+    spark,
+    path: str,
+    queries: list[tuple[int, list[float]]],
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    df: DataFrame | None = None,
+    meta: dict | None = None,
+) -> DataFrame:
+    """Batched ``knn_lsh_multiband_probe`` (all bands) → lazy (query_id,
+    id, cos_sim), per-query top-k under (cos desc, id asc).  A static
+    ``lsh_band_val IN (...)`` prefilter prunes the scan to (a superset of)
+    the union of all queries' band directories — literal partition
+    predicates, no DPP dependence; the broadcast (query_id, band_idx,
+    band_val) equality join then refines exactly.  A vector can match
+    several of a query's bands, so candidates dedup per (query, id).
+    ``meta``: the layout meta already read by
+    ``vector_index.LshMultibandIndex`` (read from ``path`` when omitted)."""
+    from .vector_index import LshMultibandIndex
+
+    meta = meta if meta is not None else LshMultibandIndex.read_meta(path)
+    if df is None:
+        df = spark.read.parquet(path)
+    nb, bb = meta["n_bands"], meta["band_bits"]
+    triples = [
+        (q, bi, v)
+        for q, qv in queries
+        for bi, v in enumerate(
+            lsh_mb_band_values(
+                lsh_signature_of(qv, meta["dim"], nb * bb, meta["seed"]), nb, bb
+            )
+        )
+    ]
+    banddf = spark.createDataFrame(
+        triples, "query_id long, lsh_band_idx int, lsh_band_val int"
+    )
+    vals = sorted({v for _, _, v in triples})
+    candidates = (
+        df.where(F.col("lsh_band_val").isin(vals))
+        .join(F.broadcast(banddf), ["lsh_band_idx", "lsh_band_val"])
+        .dropDuplicates(["query_id", id_col])
+    )
+    return _cosine_topk_many(candidates, dict(queries), k, id_col, vec_col)
 
 
 def cosine_pair_udf():

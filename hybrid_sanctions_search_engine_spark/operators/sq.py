@@ -39,15 +39,12 @@ layout-blind.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.fs import fs_for
-from .similarity import knn_bruteforce, train_ivf_centroids, assign_ivf_cells
+from .similarity import knn_bruteforce, train_ivf_centroids
 
 
 def _normalized(x: np.ndarray) -> np.ndarray:
@@ -180,41 +177,30 @@ def write_ivf_sq8_index(
     ``(id, sq_code, embedding)`` + centroid/quantizer metadata.  Probes
     prune partitions (IVF), scan the byte codes, and re-rank survivors
     exactly from the vector column of the same pruned partitions."""
+    from .vector_index import IvfSq8Index
+
     cents = train_ivf_centroids(
         embeddings, n_centroids, sample, iters, vec_col=vec_col, id_col=id_col
     )
     vmin, vmax = train_sq8_params(embeddings, sample, vec_col, id_col)
-    coded = encode_sq8(
-        assign_ivf_cells(embeddings, cents, vec_col=vec_col), vmin, vmax, vec_col
-    )
-    (
-        coded.repartition("ivf_cell")
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(path)
-    )
-    fs_for(path).commit_json(
-        os.path.join(path, "_ivf_sq8_meta.json"),
+    IvfSq8Index(
         {
             "centroids": cents.tolist(),
             "vmin": vmin.tolist(),
             "vmax": vmax.tolist(),
             "dim": int(cents.shape[1]),
-        },
-    )
+        }
+    ).write(embeddings, path, vec_col=vec_col)
     return cents, vmin, vmax
 
 
 def load_ivf_sq8_index(
     spark, path: str
 ) -> tuple[DataFrame, np.ndarray, np.ndarray, np.ndarray]:
-    meta = fs_for(path).read_json(os.path.join(path, "_ivf_sq8_meta.json"))
-    return (
-        spark.read.parquet(path),
-        np.asarray(meta["centroids"], dtype=np.float64),
-        np.asarray(meta["vmin"], dtype=np.float64),
-        np.asarray(meta["vmax"], dtype=np.float64),
-    )
+    from .vector_index import IvfSq8Index
+
+    ix = IvfSq8Index.load(spark, path)
+    return ix.df, ix.centroids, ix.vmin, ix.vmax
 
 
 def knn_ivf_sq8_probe(

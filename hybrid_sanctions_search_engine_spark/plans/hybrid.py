@@ -9,9 +9,10 @@ as driver-side control flow over DataFrame stages:
   stage 2  fuzzy         — per-term fuzzy dictionary expansion (edit ≤ 1,
                            prefix-bucketed) → BM25 over expanded terms with
                            edit-ratio-discounted contributions
-  stage 3  vector        — cosine kNN over the embeddings table (exact or LSH)
+  stage 3  vector        — cosine kNN through one ``operators.vector_index``
+                           interface (exact scan or an ANN layout)
   fusion                 — 0.6·AC + 0.4·vector (+0.1 shared bonus), dedup,
-                           threshold, top-k
+                           threshold, top-k (``decide_and_fuse``)
 
 The escalation decisions are cheap driver-side aggregates over the stage-k
 result (`O4` in SURVEY.md §4 — Spark has no native adaptive *staging*, so
@@ -38,7 +39,8 @@ from ..operators.postings import (
     doc_lengths,
     term_doc_freq,
 )
-from ..operators.similarity import knn_bruteforce
+from ..operators.fusion import SHARED_HIT_BONUS
+from ..operators.vector_index import ExactIndex, index_class
 from .wand import query_terms
 
 
@@ -104,6 +106,82 @@ class SearchOpts:
     # extra work (the non-escalating queries' scoring), cancelled via job
     # group when nothing escalates.
     speculative_fuzzy: bool = True
+
+
+def escalates(ac: list[tuple[int, float]], opts: SearchOpts) -> bool:
+    """Stage-1 → 2/3 escalation gate (``_should_escalate``,
+    hybrid_search_service.py:912-928): no AC hits, or the best AC score
+    below ``escalation_threshold``."""
+    return opts.enable_escalation and (
+        not ac or max(s for _, s in ac) < opts.escalation_threshold
+    )
+
+
+def decide_and_fuse(
+    ac: list[tuple[int, float]],
+    fuzzy: list[tuple[int, float]],
+    vector: list,
+    opts: SearchOpts,
+) -> tuple[list[tuple[int, float]], bool]:
+    """Stage-4 decision and fusion for ONE query over its k-bounded stage
+    rows → (top-k [(doc_id, score)], vector_fallback_used).  Pure driver
+    code shared by ``search()`` and ``search_many()``, so both ladders gate,
+    boost and fuse identically.
+
+    ``ac`` / ``fuzzy``: (doc_id, score) rows, keep-best merged into the
+    lexical side.  ``vector``: rows with doc_id, score (cosine after the L9
+    rerank), cos_sim and anchor_mult (the L10 multiplier evaluated
+    in-cluster by ``operators.fuzzy.anchor_mult``).
+
+      * vector gate (``_should_use_vector_fallback``,
+        hybrid_search_service.py:930-955): fuse vector hits only when AC is
+        empty, very weak (< weak_ac_threshold), or the best PRE-boost
+        vector score beats vector_better_factor × the best AC score;
+      * post-boosts (hybrid_search_service.py:1248-1260): cosine > 0.7 ⇒
+        ×1.3, > 0.5 ⇒ ×1.1, then × anchor_mult;
+      * fusion (``_combine_results``): ac_weight·lex + vec_weight·vec, plus
+        SHARED_HIT_BONUS for docs on both sides; an empty lexical side
+        escalates the vector weight to 1.0 (the reference's no-AC
+        fallback);
+      * P2 threshold (``_process_results``) BEFORE the top-k cut, so the k
+        results all qualify; ties rank by doc id."""
+    lexical: dict[int, float] = {}
+    for doc, sc in list(ac) + list(fuzzy):
+        if doc not in lexical or sc > lexical[doc]:
+            lexical[doc] = sc
+    ac_best = max((s for _, s in ac), default=0.0)
+    vec_best = max((r["score"] for r in vector), default=0.0)
+    use_vector = bool(vector) and opts.enable_vector_fallback and (
+        not ac
+        or ac_best < opts.weak_ac_threshold
+        or vec_best > opts.vector_better_factor * ac_best
+    )
+    fused = lexical
+    if use_vector:
+        boosted: dict[int, float] = {}
+        for r in vector:
+            s, cos = r["score"], r["cos_sim"]
+            if opts.enable_cosine_boost:
+                if cos > 0.7:
+                    s *= 1.3
+                elif cos > 0.5:
+                    s *= 1.1
+            s *= r["anchor_mult"]
+            doc = r["doc_id"]
+            if doc not in boosted or s > boosted[doc]:
+                boosted[doc] = s
+        vec_w = 1.0 if not lexical else opts.vector_weight
+        fused = {}
+        for doc in lexical.keys() | boosted.keys():
+            lex, vec = lexical.get(doc), boosted.get(doc)
+            score = (lex or 0.0) * opts.ac_weight + (vec or 0.0) * vec_w
+            if lex is not None and vec is not None:
+                score += SHARED_HIT_BONUS
+            fused[doc] = score
+    if opts.threshold > 0.0:
+        fused = {d: s for d, s in fused.items() if s >= opts.threshold}
+    top = sorted(fused.items(), key=lambda kv: (-kv[1], kv[0]))[: opts.top_k]
+    return top, use_vector
 
 
 def _timed_into(trace: dict, name: str, fn, lock=None):
@@ -194,16 +272,11 @@ class HybridSearchPlan:
         from the index's term rows (no extra tokenize pass).
 
         ``ann_index_dir``: serve the vector stage from a partitioned ANN
-        index (``write_ivf_index`` / ``write_lsh_index`` output) instead of a
-        full embeddings scan — the reference's vector stage is an ES HNSW
-        query, never a scan (``elasticsearch_adapters.py:819-843``).  Each
-        probe reads only the matching partition directories (PartitionFilters
-        pruning); ``ann_kind`` picks the layout (``ivf`` / ``lsh`` /
-        ``lsh_mb`` / ``ivf_pq`` / ``ivf_sq8`` — the quantized pair over
-        ``write_ivf_pq_index`` / ``write_ivf_sq8_index`` output, whose
-        candidate scans read 48-byte PQ / dim-byte int8 codes instead of
-        raw vectors — the int8 form is what ES applies to indexed
-        dense_vector fields by default); ``ann_n_probe`` /
+        index instead of a full ``embeddings`` scan — the reference's vector
+        stage is an ES HNSW query, never a scan
+        (``elasticsearch_adapters.py:819-843``).  ``ann_kind`` names the
+        layout: a key of ``operators.vector_index.VECTOR_INDEXES``, whose
+        classes document each format and its writer; ``ann_n_probe`` /
         ``ann_max_hamming`` / ``ann_refine`` are the recall dials.
 
         ``encoder``: query-text embedding encoder satisfying the
@@ -222,43 +295,18 @@ class HybridSearchPlan:
         self.index_dir = index_dir
         self.ann_index_dir = ann_index_dir
         self.ann_kind = ann_kind
-        self.ann_n_probe = ann_n_probe
-        self.ann_max_hamming = ann_max_hamming
-        self.ann_refine = ann_refine
-        self.ann_df = None
-        self.ann_centroids = None
-        self.ann_codebooks = None
-        self.ann_vmin = None
-        self.ann_vmax = None
+        layout = index_class(ann_kind)
+        # the vector stage's base: the ANN layout, cached (the plan is a
+        # STANDING server — the .persist() cache replaces the reference's
+        # TTL caches), else an exact scan of ``embeddings``
+        self.vector_index: ExactIndex | None = None
         if ann_index_dir is not None:
-            if ann_kind == "ivf":
-                from ..operators.similarity import load_ivf_index
-
-                self.ann_df, self.ann_centroids = load_ivf_index(
-                    docs.sparkSession, ann_index_dir
-                )
-            elif ann_kind == "ivf_pq":
-                from ..operators.pq import load_ivf_pq_index
-
-                self.ann_df, self.ann_centroids, self.ann_codebooks = (
-                    load_ivf_pq_index(docs.sparkSession, ann_index_dir)
-                )
-            elif ann_kind == "ivf_sq8":
-                from ..operators.sq import load_ivf_sq8_index
-
-                self.ann_df, self.ann_centroids, self.ann_vmin, self.ann_vmax = (
-                    load_ivf_sq8_index(docs.sparkSession, ann_index_dir)
-                )
-            elif ann_kind in ("lsh", "lsh_mb"):
-                self.ann_df = docs.sparkSession.read.parquet(ann_index_dir)
-            else:
-                raise ValueError(f"unknown ann_kind: {ann_kind!r}")
-            # the plan is a STANDING server (the .persist() cache replaces
-            # the reference's TTL caches); re-reading the ANN parquet from
-            # disk per batch cost ~5 s of the 960k vector stage — cached,
-            # the probe is the cosine + top-k only (~1.5 s).  Filters on
-            # the cached relation still prune via in-memory batch stats.
-            self.ann_df = self.ann_df.persist()
+            self.vector_index = layout.load(
+                docs.sparkSession, ann_index_dir, n_probe=ann_n_probe,
+                max_hamming=ann_max_hamming, refine=ann_refine,
+            ).persist()
+        elif embeddings is not None:
+            self.vector_index = ExactIndex(embeddings)
         if index_dir is not None:
             from ..sources.index_io import load_index
             from .wand import batch_n_groups
@@ -498,6 +546,16 @@ class HybridSearchPlan:
             for (q, t), w in out.items()
         ]
 
+    def _vector_indexes(self) -> list[ExactIndex]:
+        """The vector stage's sides: the base index, then an exact index over
+        the attached delta embeddings.  Delta ids are disjoint from the base
+        (compaction contract), so base ∪ delta re-top-k'd under (cos desc,
+        id asc) equals a full rebuild with no keep-best."""
+        sides = [self.vector_index] if self.vector_index is not None else []
+        if self.delta_embeddings is not None:
+            sides.append(ExactIndex(self.delta_embeddings))
+        return sides
+
     def _docs_for_text(self) -> DataFrame:
         """Doc-text store for rerank/anchor probes: base ∪ delta docs."""
         base = self.docs.select("doc_id", self.text_col)
@@ -517,7 +575,7 @@ class HybridSearchPlan:
             self.postings,
             self.dl,
             self.dictionary,
-            self.ann_df,
+            self.vector_index.df if self.ann_index_dir is not None else None,
             self._fuzzy_dict,
         ):
             if df is not None:
@@ -684,79 +742,32 @@ class HybridSearchPlan:
             )
         return self._overlay_lexical(base, list(weights), k, term_weights=weights)
 
-    def vector_stage(self, query: str, k: int, rerank: bool = True) -> DataFrame:
-        """kNN hits as (doc_id, score, cos_sim) — score starts as the cosine
-        and picks up the L9 fuzz rerank; the raw cosine rides along for the
-        stage-4 post-boosts (the reference boosts on ``trace['cosine']``,
-        hybrid_search_service.py:1248-1254).
+    def vector_stage(
+        self, query: str, k: int, rerank: bool = True, anchors: bool = False
+    ) -> DataFrame:
+        """kNN hits as (doc_id, score, cos_sim, anchor_mult) — score starts
+        as the cosine and picks up the L9 fuzz rerank; the raw cosine rides
+        along for the stage-4 post-boosts (the reference boosts on
+        ``trace['cosine']``, hybrid_search_service.py:1248-1254), and
+        ``anchor_mult`` is the L10 DoB/ID multiplier when ``anchors`` (1.0
+        otherwise) — the same in-cluster expression the batched stage uses.
 
-        With ``ann_index_dir`` set, the scan is a partition-pruned ANN probe
-        (IVF cells / LSH bands) instead of the full embeddings table.
-
-        With a delta attached (``attach_delta``), the stage serves
-        ANN-probe(base) ∪ exact-gemv(delta embeddings) re-top-k'd under the
-        same (cos desc, doc asc) order — delta ids are disjoint from the
-        base (compaction contract), so the union needs no keep-best."""
-        spark = self.docs.sparkSession
-        have_base = self.embeddings is not None or self.ann_index_dir is not None
-        if not have_base and self.delta_embeddings is None:
-            return spark.createDataFrame([], "doc_id long, score double, cos_sim double")
+        The base is the plan's ``vector_index`` (a partition-pruned ANN
+        probe, or an exact scan of ``embeddings``).  With a delta attached
+        (``attach_delta``), the stage serves base ∪ exact-gemv(delta
+        embeddings) re-top-k'd under the same (cos desc, doc asc) order."""
+        sides = self._vector_indexes()
+        if not sides:
+            return self.docs.sparkSession.createDataFrame(
+                [], "doc_id long, score double, cos_sim double, anchor_mult double"
+            )
         qv = self.encoder.encode_one(query)
-        if self.ann_index_dir is not None and self.ann_kind == "ivf":
-            from ..operators.similarity import knn_ivf_probe
-
-            res = knn_ivf_probe(
-                self.ann_df, self.ann_centroids, qv, k=k, n_probe=self.ann_n_probe
-            )
-        elif self.ann_index_dir is not None and self.ann_kind == "ivf_pq":
-            # memory-bounded layout: ADC over 48-byte codes picks
-            # refine·k candidates, exact re-rank emits true cosines — the
-            # downstream ladder (escalation gate, fusion, rerank) is
-            # layout-blind because cos_sim is exact either way
-            from ..operators.pq import knn_ivf_pq_probe
-
-            res = knn_ivf_pq_probe(
-                self.ann_df, self.ann_centroids, self.ann_codebooks, qv,
-                k=k, n_probe=self.ann_n_probe, refine=self.ann_refine,
-            )
-        elif self.ann_index_dir is not None and self.ann_kind == "ivf_sq8":
-            # int8 middle layout (the ES dense_vector default): decoded-dot
-            # candidate scan over dim-byte codes (4× less IO than raw
-            # vectors), exact re-rank — cos_sim exact, ladder layout-blind
-            from ..operators.sq import knn_ivf_sq8_probe
-
-            res = knn_ivf_sq8_probe(
-                self.ann_df, self.ann_centroids, self.ann_vmin, self.ann_vmax,
-                qv, k=k, n_probe=self.ann_n_probe, refine=self.ann_refine,
-            )
-        elif self.ann_index_dir is not None and self.ann_kind == "lsh_mb":
-            from ..operators.similarity import knn_lsh_multiband_probe
-
-            res = knn_lsh_multiband_probe(
-                spark, self.ann_index_dir, qv, k=k, df=self.ann_df
-            )
-        elif self.ann_index_dir is not None:
-            from ..operators.similarity import knn_lsh_probe
-
-            res = knn_lsh_probe(
-                spark, self.ann_index_dir, qv, k=k,
-                max_hamming=self.ann_max_hamming, df=self.ann_df,
-            )
-        elif self.embeddings is not None:
-            # arrow=True at every dim: the numpy gemv cosine is bit-identical
-            # to knn_bruteforce_many's per-query gemv, so search() and
-            # search_many() score identically (9-decimal parity tests)
-            res = knn_bruteforce(self.embeddings, qv, k=k, arrow=True)
-        else:
-            res = None
-        if self.delta_embeddings is not None:
-            # exact gemv over the (small, fresh) delta — same operator and
-            # arrow shape as the base refine, so cosines merge bit-exactly
-            delta_res = knn_bruteforce(self.delta_embeddings, qv, k=k, arrow=True)
+        res = sides[0].probe(qv, k)
+        for side in sides[1:]:
+            # same operator and arrow shape as the base refine, so cosines
+            # merge bit-exactly
             res = (
-                delta_res
-                if res is None
-                else res.unionByName(delta_res)
+                res.unionByName(side.probe(qv, k))
                 .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
                 .limit(k)
             )
@@ -765,17 +776,31 @@ class HybridSearchPlan:
             F.col("cos_sim").alias("score"),
             "cos_sim",
         )
-        if not rerank:
-            return hits
-        # L9: the reference reranks vector-fallback hits by string fuzz vs
-        # the candidate text (×1.2 when fuzz>80, ×1.1 when fuzz>60) — the
-        # join is broadcast (k rows) against the doc store (base ∪ delta)
-        from ..operators.fuzzy import rapidfuzz_rerank
+        from ..operators.fuzzy import anchor_mult, extract_anchors, rapidfuzz_rerank
 
+        dates, ids = extract_anchors(query) if anchors else ([], [])
+        if not (rerank or dates or ids):
+            return hits.withColumn("anchor_mult", F.lit(1.0))
+        # the text probe is one broadcast join of the k hits against the doc
+        # store (base ∪ delta): L9 rerank by string fuzz vs the candidate
+        # text (×1.2 when fuzz>80, ×1.1 when fuzz>60) and the L10 anchors
         with_text = self._docs_for_text().join(F.broadcast(hits), "doc_id")
-        return rapidfuzz_rerank(
-            with_text, query, text_col=self.text_col, score_col="score"
-        ).select("doc_id", "score", "cos_sim")
+        if rerank:
+            with_text = rapidfuzz_rerank(
+                with_text, query, text_col=self.text_col, score_col="score"
+            )
+
+        def lits(xs: list[str]):
+            return F.array(*[F.lit(x) for x in xs]).cast("array<string>")
+
+        mult = (
+            anchor_mult(lits(dates), lits(ids), self.text_col)
+            if dates or ids
+            else F.lit(1.0)
+        )
+        return with_text.select(
+            "doc_id", "score", "cos_sim", mult.alias("anchor_mult")
+        )
 
     # -- plan -------------------------------------------------------------
 
@@ -817,31 +842,16 @@ class HybridSearchPlan:
                 {"doc_id": d, "score": s}
                 for d, s in sorted(best.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
             ]
-        ac_n = len(ac_rows)
-        ac_best = max((r["score"] for r in ac_rows), default=0.0)
+        ac = [(r["doc_id"], r["score"]) for r in ac_rows]
+        ac_best = max((sc for _, sc in ac), default=0.0)
         trace.append(
-            SearchTraceStep("AC", ac_n, ac_best, (time.monotonic() - t0) * 1000)
+            SearchTraceStep("AC", len(ac), ac_best, (time.monotonic() - t0) * 1000)
         )
 
-        # escalation decision (_should_escalate, hybrid_search_service.py:912-928)
-        escalate = opts.enable_escalation and (
-            ac_n == 0 or ac_best < opts.escalation_threshold
-        )
-
-        # lexical keep-best merge is driver-side over k-bounded row sets
-        # (≤ 2k rows) — every stage result is already collected, so fusing
-        # through Spark jobs would only add per-job scheduling floors
-        lexical_best: dict[int, float] = {}
-        for r in ac_rows:
-            doc, sc = r["doc_id"], r["score"]
-            if doc not in lexical_best or sc > lexical_best[doc]:
-                lexical_best[doc] = sc
+        escalate = escalates(ac, opts)
+        fz_rows: list = []
         vec_rows: list = []
-        have_vectors = (
-            self.embeddings is not None
-            or self.ann_index_dir is not None
-            or self.delta_embeddings is not None
-        )
+        sides = self._vector_indexes()
         if escalate:
             # stages 2 and 3 are independent given the escalation decision
             # (fuzzy feeds nothing into the vector probe; both merge after)
@@ -854,24 +864,20 @@ class HybridSearchPlan:
             vec_fut = (
                 _Async(
                     lambda: self.vector_stage(
-                        query, k, rerank=opts.rapidfuzz_rerank
+                        query, k, rerank=opts.rapidfuzz_rerank,
+                        anchors=opts.enable_anchor_boost,
                     ).collect()
                 )
-                if have_vectors
+                if sides
                 else None
             )
             fz_rows = fz_fut.result()
-            fz_ms = (time.monotonic() - t1) * 1000
-            for r in fz_rows:
-                doc, sc = r["doc_id"], r["score"]
-                if doc not in lexical_best or sc > lexical_best[doc]:
-                    lexical_best[doc] = sc
             trace.append(
                 SearchTraceStep(
                     "FUZZY",
                     len(fz_rows),
                     max((r["score"] for r in fz_rows), default=0.0),
-                    fz_ms,
+                    (time.monotonic() - t1) * 1000,
                 )
             )
             if vec_fut is not None:
@@ -882,81 +888,13 @@ class HybridSearchPlan:
                         len(vec_rows),
                         max((r["score"] for r in vec_rows), default=0.0),
                         (time.monotonic() - t1) * 1000,
-                        {"ann": self.ann_kind if self.ann_index_dir else "bruteforce"},
+                        {"ann": sides[0].kind},
                     )
                 )
 
-        # stage-4 gating (_should_use_vector_fallback,
-        # hybrid_search_service.py:930-955): no AC hits, AC very weak, or
-        # vectors decisively better — otherwise the vector hits are dropped
-        vec_best = max((r["score"] for r in vec_rows), default=0.0)
-        use_vector = bool(vec_rows) and opts.enable_vector_fallback and (
-            ac_n == 0
-            or ac_best < opts.weak_ac_threshold
-            or vec_best > opts.vector_better_factor * ac_best
+        top, use_vector = decide_and_fuse(
+            ac, [(r["doc_id"], r["score"]) for r in fz_rows], vec_rows, opts
         )
-
-        vector_best: dict[int, float] | None = None
-        if use_vector:
-            # post-boosts on vector-fallback hits (hybrid_search_service.py:
-            # 1248-1260): cosine > 0.7 ⇒ ×1.3, > 0.5 ⇒ ×1.1 — driver-side over
-            # the k-bounded collected rows, the cosine rides in the stage output
-            vector_best = {}
-            for r in vec_rows:
-                s, cos = r["score"], r["cos_sim"]
-                if opts.enable_cosine_boost:
-                    if cos > 0.7:
-                        s *= 1.3
-                    elif cos > 0.5:
-                        s *= 1.1
-                doc = r["doc_id"]
-                if doc not in vector_best or s > vector_best[doc]:
-                    vector_best[doc] = s
-            if opts.enable_anchor_boost:
-                # L10 anchors (dob ⇒ ×1.2, id ⇒ ×1.1): needs the candidate
-                # text — one broadcast semi-probe of ≤ k hits against the doc
-                # store, collected back for the driver-side fusion
-                from ..operators.fuzzy import anchor_boost, extract_anchors
-
-                dates, ids = extract_anchors(query)
-                if dates or ids:
-                    vector = spark.createDataFrame(
-                        [{"doc_id": d, "score": s} for d, s in vector_best.items()],
-                        schema,
-                    )
-                    with_text = self._docs_for_text().join(
-                        F.broadcast(vector), "doc_id"
-                    )
-                    vector_best = {
-                        r["doc_id"]: r["score"]
-                        for r in anchor_boost(
-                            with_text, query, text_col=self.text_col,
-                            dob_boost=1.2, id_boost=1.1,
-                        ).select("doc_id", "score").collect()
-                    }
-
-        # fusion (combine_results semantics, driver-side over ≤ 3k rows):
-        # ac_w·lex + vec_w·vec + shared bonus; empty AC escalates the vector
-        # weight to 1.0 (reference no-AC fallback, fusion.combine_results)
-        if vector_best is not None:
-            vec_w = 1.0 if not lexical_best else opts.vector_weight
-            fused: dict[int, float] = {}
-            for doc in lexical_best.keys() | vector_best.keys():
-                lex = lexical_best.get(doc)
-                vec = vector_best.get(doc)
-                score = (lex or 0.0) * opts.ac_weight + (vec or 0.0) * vec_w
-                if lex is not None and vec is not None:
-                    score += 0.1  # SHARED_HIT_BONUS
-                fused[doc] = score
-        else:
-            fused = lexical_best
-
-        # P2 final threshold (reference _process_results,
-        # hybrid_search_service.py:1205-1211) — applied BEFORE the top-k cut
-        # so the k results all qualify
-        if opts.threshold > 0.0:
-            fused = {d: s for d, s in fused.items() if s >= opts.threshold}
-        top = sorted(fused.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
         result = spark.createDataFrame(
             [{"doc_id": d, "score": s} for d, s in top], schema
         )
@@ -1088,7 +1026,11 @@ class HybridSearchPlan:
 
         from ..functions.normalize import fold_homoglyphs
         from ..operators.bm25 import batch_topk
-        from ..operators.fuzzy import extract_anchors, rapidfuzz_rerank_expr
+        from ..operators.fuzzy import (
+            anchor_mult,
+            extract_anchors,
+            rapidfuzz_rerank_expr,
+        )
 
         t_start = time.monotonic()
         # per-stage wall times build in a LOCAL dict and publish as a
@@ -1156,30 +1098,25 @@ class HybridSearchPlan:
         )
 
         # --- stage 3: batched vector for the escalating subset -------------
-        # Candidates come from a partition-pruned ANN probe (IVF cells / LSH
-        # bands) or — with no ANN index — from `knn_bruteforce_many`, a
-        # shuffle-free mapInPandas scan that keeps the query×doc fan-out
-        # inside numpy Arrow tasks (NEVER a crossJoin + window over
-        # |corpus| × |queries| rows).  The L9 rerank and L10 anchor
-        # containment run IN-CLUSTER as Column exprs over the k-bounded hits;
-        # the collect ships only (query_id, doc_id, score, cos_sim,
-        # anchor_mult) — no document text reaches the driver (at web scale a
-        # 100-query × k × ~100 KB-doc collect would be ~100 MB).
-        have_vectors = (
-            self.embeddings is not None
-            or self.ann_index_dir is not None
-            or self.delta_embeddings is not None
-        )
+        # Candidates come from each side's ``probe_many`` (a partition-
+        # pruned ANN probe, or ``knn_bruteforce_many``'s shuffle-free
+        # mapInPandas scan — NEVER a crossJoin + window over |corpus| ×
+        # |queries| rows).  The L9 rerank and L10 anchor containment run
+        # IN-CLUSTER as Column exprs over the k-bounded hits; the collect
+        # ships only (query_id, doc_id, score, cos_sim, anchor_mult) — no
+        # document text reaches the driver (at web scale a 100-query × k ×
+        # ~100 KB-doc collect would be ~100 MB).
+        sides = self._vector_indexes()
 
         def _vector_stage_batch(targets: list[int], cancel=None) -> dict[int, list]:
             vec_rows: dict[int, list] = {q: [] for q in targets}
-            if not (targets and have_vectors):
+            if not (targets and sides):
                 return vec_rows
             from pyspark.sql import Window
 
-            import numpy as np
+            from ..operators.similarity import merge_local_topk
 
-            qvecs = {q: self.encoder.encode_one(qtext[q]) for q in targets}
+            qlist = [(q, self.encoder.encode_one(qtext[q])) for q in targets]
             # the L10 anchors decide — BEFORE the probe — whether a doc-text
             # probe will run at all: with the fuzz rerank off and no anchors
             # the merged rows can stay on the driver (zero further jobs),
@@ -1198,242 +1135,62 @@ class HybridSearchPlan:
             need_text_probe = opts.rapidfuzz_rerank or any(
                 a[0] or a[1] for a in anchors.values()
             )
-            ivf_hits = None
-            hit_rows: list | None = None
-            if self.ann_index_dir is not None and self.ann_kind == "ivf":
-                # fused per-cell batched scorer (round 6): ONE map-only pass
-                # over the pruned cell union; each Arrow task masks each
-                # query to its own probed cells and emits k-bounded local
-                # top-ks — no per-(query, row) join fan-out.  as_rows
-                # (round 7, rerank-free path): the exact top-k merge happens
-                # DRIVER-side over the task-local tops (≤ tasks × nq × k
-                # rows), and no further job runs at all.
-                from ..operators.similarity import knn_ivf_probe_many
-
-                if need_text_probe:
-                    ivf_hits = knn_ivf_probe_many(
-                        self.ann_df, self.ann_centroids,
-                        [(q, qvecs[q]) for q in targets],
-                        k=k, n_probe=self.ann_n_probe,
-                    ).select(
-                        "query_id", F.col("vec_id").alias("doc_id"), "cos_sim"
+            # rows mode (rerank-free path over a driver-merging base): each
+            # side's exact top-k merges DRIVER-side over the task-local tops
+            # and no further job runs; otherwise base ∪ delta stays one lazy
+            # plan, re-top-k'd by a window under the same (cos desc, id asc)
+            # order
+            as_rows = not need_text_probe and sides[0].driver_merge
+            parts = [side.probe_many(qlist, k, as_rows=as_rows) for side in sides]
+            if cancel is not None and cancel.is_set():
+                return vec_rows  # abandoned: don't submit the final job
+            if as_rows:
+                for q, d, c in merge_local_topk(
+                    [row for part in parts for row in part], k
+                ):
+                    vec_rows[q].append(
+                        {
+                            "query_id": q, "doc_id": d, "score": c,
+                            "cos_sim": c, "anchor_mult": 1.0,
+                        }
                     )
-                else:
-                    hit_rows = knn_ivf_probe_many(
-                        self.ann_df, self.ann_centroids,
-                        [(q, qvecs[q]) for q in targets],
-                        k=k, n_probe=self.ann_n_probe, as_rows=True,
-                    )
-                base = None
-            elif self.ann_index_dir is not None and self.ann_kind == "ivf_pq":
-                # same fused two-pass shape as the flat-IVF batch (ADC over
-                # the union of probed cells, one exact re-rank) — candidate
-                # selection is bit-identical to per-query probes, cosines
-                # exact, so batch↔single parity holds at 9 decimals
-                from ..operators.pq import knn_ivf_pq_probe_many
-
-                if need_text_probe:
-                    ivf_hits = knn_ivf_pq_probe_many(
-                        self.ann_df, self.ann_centroids, self.ann_codebooks,
-                        [(q, qvecs[q]) for q in targets],
-                        k=k, n_probe=self.ann_n_probe, refine=self.ann_refine,
-                    ).select(
-                        "query_id", F.col("vec_id").alias("doc_id"), "cos_sim"
-                    )
-                else:
-                    hit_rows = knn_ivf_pq_probe_many(
-                        self.ann_df, self.ann_centroids, self.ann_codebooks,
-                        [(q, qvecs[q]) for q in targets],
-                        k=k, n_probe=self.ann_n_probe, refine=self.ann_refine,
-                        as_rows=True,
-                    )
-                base = None
-            elif self.ann_index_dir is not None and self.ann_kind == "ivf_sq8":
-                # int8 layout, same fused two-pass shape; candidate
-                # selection bit-identical to per-query probes (row-local
-                # multiply-reduce scores), cosines exact after re-rank
-                from ..operators.sq import knn_ivf_sq8_probe_many
-
-                if need_text_probe:
-                    ivf_hits = knn_ivf_sq8_probe_many(
-                        self.ann_df, self.ann_centroids, self.ann_vmin,
-                        self.ann_vmax, [(q, qvecs[q]) for q in targets],
-                        k=k, n_probe=self.ann_n_probe, refine=self.ann_refine,
-                    ).select(
-                        "query_id", F.col("vec_id").alias("doc_id"), "cos_sim"
-                    )
-                else:
-                    hit_rows = knn_ivf_sq8_probe_many(
-                        self.ann_df, self.ann_centroids, self.ann_vmin,
-                        self.ann_vmax, [(q, qvecs[q]) for q in targets],
-                        k=k, n_probe=self.ann_n_probe, refine=self.ann_refine,
-                        as_rows=True,
-                    )
-                base = None
-            elif self.ann_index_dir is not None and self.ann_kind == "lsh_mb":
-                import os as _os
-
-                from ..operators.similarity import lsh_signature_of
-                from ..sources.fs import fs_for
-
-                mmeta = fs_for(self.ann_index_dir).read_json(
-                    _os.path.join(self.ann_index_dir, "_lsh_mb_meta.json")
-                )
-                nb, bb = mmeta["n_bands"], mmeta["band_bits"]
-                triples = []
-                for q in targets:
-                    sig = lsh_signature_of(
-                        qvecs[q], mmeta["dim"], nb * bb, mmeta["seed"]
-                    )
-                    for bi in range(nb):
-                        triples.append(
-                            (q, bi, (sig >> (bi * bb)) & ((1 << bb) - 1))
-                        )
-                banddf = spark.createDataFrame(
-                    triples,
-                    "query_id long, lsh_band_idx int, lsh_band_val int",
-                )
-                # static isin prefilters prune the scan to (a superset of)
-                # the union of all queries' band directories — literal
-                # partition predicates, no DPP dependence; the broadcast
-                # equality join then refines exactly.  A vector can match
-                # several of a query's bands → dedup per (query, vec).
-                vals = sorted({v for _, _, v in triples})
-                base = (
-                    self.ann_df
-                    .where(F.col("lsh_band_val").isin(vals))
-                    .join(
-                        F.broadcast(banddf), ["lsh_band_idx", "lsh_band_val"]
-                    )
-                    .dropDuplicates(["query_id", "vec_id"])
-                )
-            elif self.ann_index_dir is not None:
-                from ..operators.similarity import (
-                    _LSH_TOP_BITS,
-                    lsh_signature_of,
-                )
-                import itertools
-                import os as _os
-
-                from ..sources.fs import fs_for
-
-                lmeta = fs_for(self.ann_index_dir).read_json(
-                    _os.path.join(self.ann_index_dir, "_lsh_meta.json")
-                )
-                n_planes = lmeta["n_planes"]
-                sigs, bands = {}, {}
-                for q in targets:
-                    s = lsh_signature_of(qvecs[q], lmeta["dim"], n_planes, lmeta["seed"])
-                    sigs[q] = s
-                    qband = (s >> (n_planes - _LSH_TOP_BITS)) & ((1 << _LSH_TOP_BITS) - 1)
-                    bs = set()
-                    for h in range(self.ann_max_hamming + 1):
-                        for flips in itertools.combinations(range(_LSH_TOP_BITS), h):
-                            b = qband
-                            for f in flips:
-                                b ^= 1 << f
-                            bs.add(b)
-                    bands[q] = bs
-                union_bands = sorted({b for bs in bands.values() for b in bs})
-                banddf = spark.createDataFrame(
-                    [(q, b, sigs[q]) for q, bs in bands.items() for b in bs],
-                    "query_id long, lsh_band int, qsig long",
-                )
-                base = (
-                    self.ann_df
-                    .where(F.col("lsh_band").isin(union_bands))
-                    .join(F.broadcast(banddf), "lsh_band")
-                    .where(
-                        F.bit_count(F.col("lsh_sig").bitwiseXOR(F.col("qsig")))
-                        <= self.ann_max_hamming
-                    )
-                )
-            else:
-                base = None
-            if hit_rows is not None:
-                hits = None
-            elif ivf_hits is not None:
-                hits = ivf_hits
-            elif base is not None:
-                # Arrow cosine at EVERY dim: the batched probe scores
-                # |escalating| × cell-population pairs (~370k at 960k docs ×
-                # 34 queries), and the interpreted HOF cosine_col walks each
-                # pair's arrays three times (dot + both norms) in Catalyst
-                # eval — ~6 s of the round-5 profile; the numpy batch UDF
-                # does one einsum.  The query matrix rides in the UDF
-                # closure keyed by query_id (cosine_vs_queries_udf) instead
-                # of a per-row qvec join column — half the Arrow traffic.
-                # (Single-query probes keep the JVM expr: their post-prune
-                # volume is tiny and the job floor wins.)
-                from ..operators.similarity import cosine_vs_queries_udf
-
-                cos = cosine_vs_queries_udf(qvecs)(
-                    F.col("embedding"), F.col("query_id")
-                )
+                return vec_rows
+            hits = parts[0]
+            if len(parts) > 1:
                 wv = Window.partitionBy("query_id").orderBy(
-                    F.desc("cos_sim"), F.asc("doc_id")
+                    F.desc("cos_sim"), F.asc("vec_id")
                 )
+                for part in parts[1:]:
+                    hits = hits.unionByName(part)
                 hits = (
-                    base.withColumn("cos_sim", cos)
-                    .select(
-                        "query_id", F.col("vec_id").alias("doc_id"), "cos_sim"
-                    )
-                    .withColumn("rn", F.row_number().over(wv))
+                    hits.withColumn("rn", F.row_number().over(wv))
                     .where(F.col("rn") <= k)
                     .drop("rn")
                 )
-            elif self.embeddings is not None:
-                # no ANN index: exact multi-query cosine in ONE shuffle-free
-                # scan (mapInPandas gemv per query, batch-local top-k) — the
-                # scale-correct replacement for crossJoin + window
-                from ..operators.similarity import knn_bruteforce_many
-
-                hits = knn_bruteforce_many(
-                    self.embeddings, [(q, qvecs[q]) for q in targets], k=k
-                ).select("query_id", F.col("vec_id").alias("doc_id"), "cos_sim")
-            else:
-                hits = None
-            if self.delta_embeddings is not None:
-                # overlay (round 6): exact batched gemv over the delta
-                # embeddings — same per-query gemv shape as the single-path
-                # knn_bruteforce, so base∪delta re-top-k merges bit-exactly
-                # with vector_stage()'s union (delta ids disjoint from base)
-                from ..operators.similarity import knn_bruteforce_many
-
-                dhits = knn_bruteforce_many(
-                    self.delta_embeddings, [(q, qvecs[q]) for q in targets], k=k
-                ).select("query_id", F.col("vec_id").alias("doc_id"), "cos_sim")
-                if hit_rows is not None:
-                    # base rows + collected delta top-k, re-top-k'd driver-
-                    # side under the same (cos desc, doc asc) order the
-                    # union+window produced (delta ids disjoint from base)
-                    from ..operators.similarity import merge_local_topk
-
-                    hit_rows = merge_local_topk(
-                        list(hit_rows)
-                        + [
-                            (r["query_id"], r["doc_id"], r["cos_sim"])
-                            for r in dhits.collect()
-                        ],
-                        k,
-                    )
-                elif hits is None:
-                    hits = dhits
-                else:
-                    wv2 = Window.partitionBy("query_id").orderBy(
-                        F.desc("cos_sim"), F.asc("doc_id")
-                    )
-                    hits = (
-                        hits.unionByName(dhits)
-                        .withColumn("rn", F.row_number().over(wv2))
-                        .where(F.col("rn") <= k)
-                        .drop("rn")
-                    )
-            if hits is not None:
-                hits = hits.withColumn("score", F.col("cos_sim"))
+            hits = hits.select(
+                "query_id",
+                F.col("vec_id").alias("doc_id"),
+                "cos_sim",
+                F.col("cos_sim").alias("score"),
+            )
+            # rerank-free fast path: when no query carries anchors and the
+            # fuzz rerank is off, the doc-text join would only ever compute
+            # anchor_mult = 1.0 and an unchanged score — skip the full doc
+            # scan (the text probe over a cached 960k corpus costs ~1-2 s
+            # per batch) and collect the k-bounded hits directly.
+            if not need_text_probe:
+                for r in hits.withColumn(
+                    "anchor_mult", F.lit(1.0)
+                ).select(
+                    "query_id", "doc_id", "score", "cos_sim", "anchor_mult"
+                ).collect():
+                    vec_rows[r["query_id"]].append(r)
+                return vec_rows
             # qtext (for the L9 rerank) + pre-extracted anchors join in as a
-            # broadcast side table; doc text joins only transiently for the
-            # in-cluster exprs and never reaches the driver
+            # broadcast side table; the ≤ nq×k hit set broadcasts INTO the
+            # doc store (base ∪ delta; the big side streams through a
+            # broadcast hash join — never shuffled), and doc text joins only
+            # transiently for the in-cluster exprs, never reaching the driver
             qmeta = spark.createDataFrame(
                 [
                     {
@@ -1447,37 +1204,6 @@ class HybridSearchPlan:
                 "query_id long, qtext string, qdates array<string>, "
                 "qid_anchors array<string>",
             )
-            # rerank-free fast path: when no query carries anchors and the
-            # fuzz rerank is off, the doc-text join would only ever compute
-            # anchor_mult = 1.0 and an unchanged score — skip the full doc
-            # scan (the text probe over a cached 960k corpus costs ~1-2 s
-            # per batch) and collect the k-bounded hits directly.  search()
-            # produces identical results under the same opts (its rerank is
-            # gated on opts.rapidfuzz_rerank and empty anchors multiply by
-            # 1.0), so batch↔single parity is preserved.
-            if cancel is not None and cancel.is_set():
-                return vec_rows  # abandoned: don't submit the final job
-            if not need_text_probe:
-                if hit_rows is not None:
-                    # driver-merged rows: ZERO further jobs on this path
-                    for q, d, c in hit_rows:
-                        vec_rows[q].append(
-                            {
-                                "query_id": q, "doc_id": d, "score": c,
-                                "cos_sim": c, "anchor_mult": 1.0,
-                            }
-                        )
-                    return vec_rows
-                for r in hits.withColumn(
-                    "anchor_mult", F.lit(1.0)
-                ).select(
-                    "query_id", "doc_id", "score", "cos_sim", "anchor_mult"
-                ).collect():
-                    vec_rows[r["query_id"]].append(r)
-                return vec_rows
-            # the ≤ nq×k hit set broadcasts INTO the doc store (base ∪ delta;
-            # the big side streams through a broadcast hash join — never
-            # shuffled), same shape as search()'s single-query text probe
             with_text = self._docs_for_text().join(
                 F.broadcast(hits.join(F.broadcast(qmeta), "query_id")),
                 "doc_id",
@@ -1487,20 +1213,11 @@ class HybridSearchPlan:
                     with_text, F.col("qtext"), text_col=self.text_col,
                     score_col="score", sort=False,
                 )
-            # L10 anchors in-cluster: same containment × multiplier as
-            # operators.fuzzy.anchor_boost (dob ×1.2, id ×1.1); empty anchor
-            # arrays make both exists() false → multiplier 1.0
-            tc = self.text_col
-            anchor_mult = F.when(
-                F.exists(F.col("qdates"), lambda d: F.col(tc).contains(d)),
-                F.lit(1.2),
-            ).otherwise(F.lit(1.0)) * F.when(
-                F.exists(F.col("qid_anchors"), lambda i: F.col(tc).contains(i)),
-                F.lit(1.1),
-            ).otherwise(F.lit(1.0))
             for r in with_text.select(
                 "query_id", "doc_id", "score", "cos_sim",
-                anchor_mult.alias("anchor_mult"),
+                anchor_mult(
+                    F.col("qdates"), F.col("qid_anchors"), self.text_col
+                ).alias("anchor_mult"),
             ).collect():
                 vec_rows[r["query_id"]].append(r)
             return vec_rows
@@ -1765,13 +1482,7 @@ class HybridSearchPlan:
 
         trace["ac_ms"] = (time.monotonic() - t_start) * 1000
 
-        escalating = [
-            qid for qid, _ in queries
-            if opts.enable_escalation and (
-                not ac_rows[qid]
-                or max(s for _, s in ac_rows[qid]) < opts.escalation_threshold
-            )
-        ]
+        escalating = [qid for qid, _ in queries if escalates(ac_rows[qid], opts)]
 
         # --- stages 2+3: both futures may already be in flight (speculative,
         # launched at t0); lazy fallbacks cover the non-speculative opts.
@@ -1837,55 +1548,9 @@ class HybridSearchPlan:
         out_rows = []
         meta: dict[int, dict] = {}
         for qid, _text in queries:
-            lexical_best: dict[int, float] = dict(ac_rows[qid])
-            for doc, sc in fz_rows.get(qid, []):
-                if doc not in lexical_best or sc > lexical_best[doc]:
-                    lexical_best[doc] = sc
-            vrows = vec_rows.get(qid, [])
-            ac_n = len(ac_rows[qid])
-            ac_best = max((s for _, s in ac_rows[qid]), default=0.0)
-            vec_best = max((r["score"] for r in vrows), default=0.0)
-            use_vector = bool(vrows) and opts.enable_vector_fallback and (
-                ac_n == 0
-                or ac_best < opts.weak_ac_threshold
-                or vec_best > opts.vector_better_factor * ac_best
+            top, use_vector = decide_and_fuse(
+                ac_rows[qid], fz_rows.get(qid, []), vec_rows.get(qid, []), opts
             )
-            vector_best: dict[int, float] | None = None
-            if use_vector:
-                vector_best = {}
-                for r in vrows:
-                    s, cos = r["score"], r["cos_sim"]
-                    if opts.enable_cosine_boost:
-                        if cos > 0.7:
-                            s *= 1.3
-                        elif cos > 0.5:
-                            s *= 1.1
-                    # L10 anchors were evaluated in-cluster (anchor_mult
-                    # column); the multiplication happens here so the stage-4
-                    # gate above still sees the pre-boost score, exactly like
-                    # search()
-                    s *= r["anchor_mult"]
-                    doc = r["doc_id"]
-                    if doc not in vector_best or s > vector_best[doc]:
-                        vector_best[doc] = s
-            if vector_best is not None:
-                vec_w = 1.0 if not lexical_best else opts.vector_weight
-                fused: dict[int, float] = {}
-                for doc in lexical_best.keys() | vector_best.keys():
-                    lex = lexical_best.get(doc)
-                    vec = vector_best.get(doc)
-                    score = (lex or 0.0) * opts.ac_weight + (vec or 0.0) * vec_w
-                    if lex is not None and vec is not None:
-                        score += 0.1  # SHARED_HIT_BONUS
-                    fused[doc] = score
-            else:
-                fused = lexical_best
-            # P2 final threshold — identical to search()'s pre-top-k filter
-            if opts.threshold > 0.0:
-                fused = {
-                    d: s for d, s in fused.items() if s >= opts.threshold
-                }
-            top = sorted(fused.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
             for rank, (doc, s) in enumerate(top, start=1):
                 out_rows.append(
                     {"query_id": qid, "doc_id": doc, "score": s, "rank": rank}

@@ -34,10 +34,6 @@ def load_table(spark: SparkSession, name: str, directory: str | None = None) -> 
     return spark.read.parquet(os.path.join(directory, f"{name}.parquet"))
 
 
-def load_documents(spark: SparkSession, directory: str | None = None) -> DataFrame:
-    return load_table(spark, "documents", directory)
-
-
 def write_bucketed(
     df: DataFrame,
     table_name: str,

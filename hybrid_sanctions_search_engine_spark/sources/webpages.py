@@ -30,7 +30,7 @@ data, per the driver instruction.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 WEBPAGE_SCHEMA = (
@@ -178,13 +178,3 @@ def webpages_to_documents(
             .drop("_ld")
         )
     return docs
-
-
-def read_webpages(
-    spark: SparkSession, path_or_table: str, is_table: bool = False
-) -> DataFrame:
-    """Web-page corpus reader: catalog table (Iceberg in production) or a
-    parquet directory — identical columnar-scan semantics either way."""
-    if is_table:
-        return spark.read.table(path_or_table)
-    return spark.read.parquet(path_or_table)

@@ -191,22 +191,13 @@ def fold_delta_embeddings(
     twin of ``merge_compact`` (the reference rebuilds+swaps its whole FAISS/ES
     vector index, ``watchlist_index_service.py:387-456``; on a partitioned
     Spark layout an append into the right partition directories does the same
-    without touching existing rows):
-
-      * ivf    — assign each vector to its nearest EXISTING centroid (no
-                 retrain: probes stay consistent with queries planned against
-                 the stored centroids) and append into the matching
-                 ``ivf_cell=…`` directories;
-      * ivf_pq — same cell assignment, plus each vector is PQ-coded with
-                 the stored codebooks (no retrain, for the same reason)
-                 before the append — folded rows are ADC-scannable exactly
-                 like base rows;
-      * ivf_sq8 — same cell assignment, plus each vector is int8-coded with
-                 the stored per-dimension (vmin, vmax) quantizer — folded
-                 rows are code-scannable exactly like base rows;
-      * lsh    — hyperplane signature with the stored (dim, n_planes, seed),
-                 append into ``lsh_band=…``;
-      * lsh_mb — per-band rows appended into ``lsh_band_idx=…/lsh_band_val=…``.
+    without touching existing rows).  ``kind`` is a key of
+    ``operators.vector_index.VECTOR_INDEXES``; that layout's ``stage_rows``
+    assigns each vector its cell or bands and encodes it with the STORED
+    parameters (centroids, PQ codebooks, SQ8 quantizer, hyperplanes — no
+    retrain, so probes stay consistent with queries planned against them),
+    and the rows append into the matching partition directories, where they
+    probe and scan exactly like base rows.
 
     Crash-safe + idempotent per delta fingerprint: the assigned rows land in
     a dot-prefixed STAGE directory first (invisible to readers), a pending
@@ -229,17 +220,12 @@ def fold_delta_embeddings(
     import hashlib
     import time
 
+    from ..operators.vector_index import index_class
     from ..sources.fs import fs_for
 
-    meta_name = {
-        "ivf": "_ivf_meta.json",
-        "ivf_pq": "_ivf_pq_meta.json",
-        "ivf_sq8": "_ivf_sq8_meta.json",
-        "lsh": "_lsh_meta.json",
-        "lsh_mb": "_lsh_mb_meta.json",
-    }[kind]
+    layout = index_class(kind)  # ValueError on an unknown kind
     fs = fs_for(ann_index_dir)
-    meta_path = os.path.join(ann_index_dir, meta_name)
+    meta_path = layout.meta_path(ann_index_dir)
     meta = fs.read_json(meta_path)
     t0 = time.monotonic()
 
@@ -347,90 +333,11 @@ def fold_delta_embeddings(
     if n_vecs == 0:
         return {"folded_vecs": 0, "noop": "empty delta", "fp": fp}
 
-    if kind in ("ivf", "ivf_pq", "ivf_sq8"):
-        from ..operators.similarity import assign_ivf_cells
-
-        import numpy as np
-
-        cents = np.asarray(meta["centroids"], dtype=np.float64)
-        staged = assign_ivf_cells(delta_embeddings, cents)
-        if kind == "ivf_pq":
-            # residual-code with the STORED centroids+codebooks — parquet
-            # is self-describing, so the appended files' column order need
-            # not match the base
-            from ..operators.pq import encode_pq
-
-            if not meta.get("residual"):
-                # mirror load_ivf_pq_index's refusal: appending
-                # residual-coded rows next to raw-coded base rows would
-                # permanently mix two incompatible encodings in one index
-                raise ValueError(
-                    "pre-residual ivf_pq index format; rebuild with "
-                    "write_ivf_pq_index before folding deltas"
-                )
-
-            staged = encode_pq(
-                staged,
-                np.asarray(meta["codebooks"], dtype=np.float64),
-                centroids=cents,
-            )
-        elif kind == "ivf_sq8":
-            # int8-code with the STORED per-dim quantizer (no retrain —
-            # scans must decode folded rows with the same (vmin, vmax))
-            from ..operators.sq import encode_sq8
-
-            staged = encode_sq8(
-                staged,
-                np.asarray(meta["vmin"], dtype=np.float64),
-                np.asarray(meta["vmax"], dtype=np.float64),
-            )
-        part_cols = ["ivf_cell"]
-        staged.repartition(*part_cols).write.mode("overwrite").partitionBy(
-            *part_cols
-        ).parquet(stage_dir)
-    elif kind == "lsh":
-        from ..operators.similarity import _LSH_TOP_BITS, add_lsh_signature
-
-        n_planes = meta["n_planes"]
-        with_sig = add_lsh_signature(
-            delta_embeddings, meta["dim"], n_planes, meta["seed"]
-        )
-        staged = with_sig.withColumn(
-            "lsh_band",
-            F.shiftrightunsigned(F.col("lsh_sig"), n_planes - _LSH_TOP_BITS)
-            .bitwiseAND(F.lit((1 << _LSH_TOP_BITS) - 1))
-            .cast("int"),
-        )
-        part_cols = ["lsh_band"]
-        staged.repartition(*part_cols).write.mode("overwrite").partitionBy(
-            *part_cols
-        ).parquet(stage_dir)
-    elif kind == "lsh_mb":
-        from ..operators.similarity import add_lsh_signature
-
-        n_bands, band_bits = meta["n_bands"], meta["band_bits"]
-        with_sig = add_lsh_signature(
-            delta_embeddings, meta["dim"], n_bands * band_bits, meta["seed"]
-        )
-        bands = F.array(
-            *[
-                F.shiftrightunsigned(F.col("lsh_sig"), i * band_bits)
-                .bitwiseAND(F.lit((1 << band_bits) - 1))
-                .cast("int")
-                for i in range(n_bands)
-            ]
-        )
-        staged = with_sig.withColumn("_bands", bands).select(
-            "vec_id",
-            "embedding",
-            F.posexplode("_bands").alias("lsh_band_idx", "lsh_band_val"),
-        )
-        part_cols = ["lsh_band_idx", "lsh_band_val"]
-        staged.repartition(*part_cols).write.mode("overwrite").partitionBy(
-            *part_cols
-        ).parquet(stage_dir)
-    else:
-        raise ValueError(f"unknown ann kind: {kind!r}")
+    # parquet is self-describing, so the appended files' column order need
+    # not match the base
+    ix = layout(meta)
+    ix.write_rows(delta_embeddings, stage_dir)
+    part_cols = ix.part_cols
 
     # enumerate staged partition files → deterministic move plan
     moves: list[list[str]] = []
@@ -968,7 +875,7 @@ def merge_compact(
         IndexMeta,
         _encode_posting_frame,
         _write_shard,
-        decode_shard_rows,
+        decode_shard_arrays,
         load_index,
     )
     from dataclasses import asdict
@@ -1195,11 +1102,15 @@ def merge_compact(
     def merge_fn(key, base_pdf: pd.DataFrame, delta_pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(key[0])
         t0 = time.monotonic()
-        raw_base = decode_shard_rows(base_pdf)
-        raw_base = raw_base.assign(
-            chunk=np.right_shift(
-                raw_base["doc_id"].to_numpy(dtype=np.int64), chunk_bits
-            )
+        dec = decode_shard_arrays(base_pdf)
+        raw_base = pd.DataFrame(
+            {
+                "term": dec["uniq_terms"][dec["term_codes"]],
+                "doc_id": dec["doc_id"],
+                "tf": dec["tf"],
+                "doc_len": dec["doc_len"],
+                "chunk": np.right_shift(dec["doc_id"], chunk_bits),
+            }
         )
         raw = pd.concat(
             [raw_base, delta_pdf[["term", "chunk", "doc_id", "tf", "doc_len"]]],

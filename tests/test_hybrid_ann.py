@@ -71,13 +71,15 @@ def test_vector_stage_reads_only_probed_partitions(spark, ivf_plan):
     query = "spark query join"
     hits = ivf_plan.vector_stage(query, k=5, rerank=False)
     assert hits.count() > 0
-    assert ivf_plan.ann_df.storageLevel.useMemory  # standing cache is on
+    assert ivf_plan.vector_index.df.storageLevel.useMemory  # standing cache is on
 
     qv = np.asarray(pseudo_embedding(query, DIM))
     qv = qv / np.linalg.norm(qv)
     probe = {
         int(c)
-        for c in np.argsort(-(ivf_plan.ann_centroids @ qv))[: ivf_plan.ann_n_probe]
+        for c in np.argsort(-(ivf_plan.vector_index.centroids @ qv))[
+            : ivf_plan.vector_index.n_probe
+        ]
     }
     copy_dir = tempfile.mkdtemp(prefix="ivf_pruning_copy_")
     shutil.rmtree(copy_dir)
@@ -274,7 +276,7 @@ def test_vector_fallback_gating_strong_ac_drops_vectors(spark, corpus):
 def test_cosine_boost_formula(spark):
     """cos > 0.7 ⇒ ×1.3, 0.5 < cos ≤ 0.7 ⇒ ×1.1, else ×1.0
     (hybrid_search_service.py:1248-1254).  AC is empty so the fused score is
-    exactly the boosted vector score (combine_results escalates the vector
+    exactly the boosted vector score (decide_and_fuse escalates the vector
     weight to 1.0 on empty AC)."""
     qv = np.asarray(pseudo_embedding("zzzqqq", DIM))
     qv /= np.linalg.norm(qv)
@@ -332,7 +334,7 @@ def test_anchor_boost_wired_into_ladder(spark):
 
 def test_single_query_vector_stage_probes_standing_cache(spark, ivf_plan):
     """Round-6 verdict item 8 (the q_hybrid_escalated_ann drift watch): the
-    single-query vector stage must consume the plan's persisted ``ann_df``
+    single-query vector stage must consume the plan's persisted ``vector_index.df``
     exactly like the batch path — an InMemoryTableScan in the executed plan,
     and NO parquet FileScan of the ANN directory (a re-read per stage cost
     ~5 s/batch at 960k before the round-5 standing cache)."""
@@ -346,7 +348,7 @@ def test_single_query_vector_stage_probes_standing_cache(spark, ivf_plan):
     # a re-read from parquet would return real file paths
     files = [
         r[0]
-        for r in ivf_plan.ann_df.where(F.col("ivf_cell").isin([0, 1]))
+        for r in ivf_plan.vector_index.df.where(F.col("ivf_cell").isin([0, 1]))
         .select(F.input_file_name())
         .distinct()
         .collect()
@@ -356,7 +358,7 @@ def test_single_query_vector_stage_probes_standing_cache(spark, ivf_plan):
 
 def test_batch_vector_stage_probes_standing_cache(spark, ivf_plan):
     """Batch twin of the cache pin: the speculative/batched probe builds on
-    ``self.ann_df`` — same InMemoryTableScan, no ANN-dir FileScan."""
+    ``self.vector_index.df`` — same InMemoryTableScan, no ANN-dir FileScan."""
     plan_obj = ivf_plan
     qtexts = {1: "spark query join", 2: "merge sort"}
     import numpy as np
@@ -366,16 +368,16 @@ def test_batch_vector_stage_probes_standing_cache(spark, ivf_plan):
         q: [
             int(c)
             for c in np.argsort(
-                -(plan_obj.ann_centroids @ (
+                -(plan_obj.vector_index.centroids @ (
                     np.asarray(v) / max(np.linalg.norm(v), 1e-12)
                 ))
-            )[: plan_obj.ann_n_probe]
+            )[: plan_obj.vector_index.n_probe]
         ]
         for q, v in qvecs.items()
     }
     union_cells = sorted({c for cs in cells.values() for c in cs})
     from pyspark.sql import functions as F2
 
-    probe = plan_obj.ann_df.where(F2.col("ivf_cell").isin(union_cells))
+    probe = plan_obj.vector_index.df.where(F2.col("ivf_cell").isin(union_cells))
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan, plan

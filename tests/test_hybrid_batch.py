@@ -14,6 +14,13 @@ import os
 import pytest
 
 from hybrid_sanctions_search_engine_spark.functions.vectors import pseudo_embedding
+from hybrid_sanctions_search_engine_spark.operators.pq import write_ivf_pq_index
+from hybrid_sanctions_search_engine_spark.operators.similarity import (
+    write_ivf_index,
+    write_lsh_index,
+    write_lsh_multiband_index,
+)
+from hybrid_sanctions_search_engine_spark.operators.sq import write_ivf_sq8_index
 from hybrid_sanctions_search_engine_spark.plans.hybrid import (
     HybridSearchPlan,
     SearchOpts,
@@ -69,38 +76,6 @@ def test_search_many_parity_bruteforce(spark, corpus):
     _assert_parity(plan, SearchOpts(top_k=8))
 
 
-def test_search_many_parity_ivf(spark, corpus, tmp_path):
-    from hybrid_sanctions_search_engine_spark.operators.similarity import (
-        write_ivf_index,
-    )
-
-    docs, emb = corpus
-    path = str(tmp_path / "ivf")
-    write_ivf_index(emb, path, n_centroids=8, iters=8)
-    plan = HybridSearchPlan(
-        docs, embeddings=emb, embedding_dim=DIM,
-        ann_index_dir=path, ann_kind="ivf", ann_n_probe=3,
-    )
-    _assert_parity(plan, SearchOpts(top_k=8))
-
-
-def test_search_many_parity_ivf_pq(spark, corpus, tmp_path):
-    """PQ-backed batched vector stage ≡ per-query knn_ivf_pq_probe path
-    (candidate selection bit-identical, exact re-rank cosines at 9dp)."""
-    from hybrid_sanctions_search_engine_spark.operators.pq import (
-        write_ivf_pq_index,
-    )
-
-    docs, emb = corpus
-    path = str(tmp_path / "ivfpqb")
-    write_ivf_pq_index(emb, path, n_centroids=8, m=16, iters=8)
-    plan = HybridSearchPlan(
-        docs, embeddings=emb, embedding_dim=DIM,
-        ann_index_dir=path, ann_kind="ivf_pq", ann_n_probe=3, ann_refine=4,
-    )
-    _assert_parity(plan, SearchOpts(top_k=8))
-
-
 def test_search_many_parity_no_rerank_with_anchor(spark, corpus):
     """Anchor boosts flow through the batched driver-side path identically
     (rerank off isolates the anchor multiplication)."""
@@ -131,42 +106,60 @@ def test_search_many_parity_index_backed(spark, sf_smoke_dir, corpus, tmp_path):
     _assert_parity(plan, SearchOpts(top_k=8))
 
 
-def test_search_many_parity_lsh(spark, corpus, tmp_path):
-    """LSH-band-backed batched vector stage ≡ per-query knn_lsh_probe path."""
-    from hybrid_sanctions_search_engine_spark.operators.similarity import (
-        write_lsh_index,
+def test_search_many_empty_and_unknown(spark, corpus, tmp_path):
+    from hybrid_sanctions_search_engine_spark.streaming.incremental import (
+        fold_delta_embeddings,
     )
 
-    docs, emb = corpus
-    path = str(tmp_path / "lshb")
-    write_lsh_index(emb, path, dim=DIM, n_planes=16)
-    plan = HybridSearchPlan(
-        docs, embeddings=emb, embedding_dim=DIM,
-        ann_index_dir=path, ann_kind="lsh", ann_max_hamming=6,
-    )
-    _assert_parity(plan, SearchOpts(top_k=8))
-
-
-def test_search_many_empty_and_unknown(spark, corpus):
     docs, emb = corpus
     plan = HybridSearchPlan(docs, embeddings=emb, embedding_dim=DIM)
     res, meta = plan.search_many([], SearchOpts(top_k=5))
     assert res.count() == 0 and meta == {}
+    # an unknown layout name is a ValueError everywhere the registry is
+    # consulted — never a KeyError from a lookup table
+    path = str(tmp_path / "ivf_unknown")
+    write_ivf_index(emb, path, n_centroids=4, iters=4)
+    with pytest.raises(ValueError, match="bogus"):
+        HybridSearchPlan(
+            docs, embeddings=emb, embedding_dim=DIM,
+            ann_index_dir=path, ann_kind="bogus",
+        )
+    with pytest.raises(ValueError, match="bogus"):
+        fold_delta_embeddings(spark, path, emb.limit(3), kind="bogus")
 
 
-def test_search_many_parity_lsh_multiband(spark, corpus, tmp_path):
-    """Banded-LSH-backed (ann_kind='lsh_mb') batched vector stage ≡ the
-    per-query knn_lsh_multiband_probe path."""
-    from hybrid_sanctions_search_engine_spark.operators.similarity import (
-        write_lsh_multiband_index,
-    )
+# writer arguments + plan dials per layout; the batched vector stage of
+# each must match the per-query probe path (candidate selection
+# bit-identical, exact re-rank cosines at 9 decimals)
+ANN_LAYOUTS = {
+    "ivf": (write_ivf_index, dict(n_centroids=8, iters=8), dict(ann_n_probe=3)),
+    "ivf_pq": (
+        write_ivf_pq_index, dict(n_centroids=8, m=16, iters=8),
+        dict(ann_n_probe=3, ann_refine=4),
+    ),
+    "ivf_sq8": (
+        write_ivf_sq8_index, dict(n_centroids=8, iters=8),
+        dict(ann_n_probe=3, ann_refine=4),
+    ),
+    "lsh": (
+        write_lsh_index, dict(dim=DIM, n_planes=16), dict(ann_max_hamming=6)
+    ),
+    "lsh_mb": (
+        write_lsh_multiband_index, dict(dim=DIM, n_bands=8, band_bits=8), {}
+    ),
+}
 
+
+@pytest.mark.parametrize("kind", list(ANN_LAYOUTS))
+def test_search_many_parity_ann(spark, corpus, tmp_path, kind):
+    """ANN-backed batched vector stage ≡ the per-query probe, every layout."""
+    write, write_args, dials = ANN_LAYOUTS[kind]
     docs, emb = corpus
-    path = str(tmp_path / "lsh_mb")
-    write_lsh_multiband_index(emb, path, dim=DIM, n_bands=8, band_bits=8)
+    path = str(tmp_path / kind)
+    write(emb, path, **write_args)
     plan = HybridSearchPlan(
         docs, embeddings=emb, embedding_dim=DIM,
-        ann_index_dir=path, ann_kind="lsh_mb",
+        ann_index_dir=path, ann_kind=kind, **dials,
     )
     _assert_parity(plan, SearchOpts(top_k=8))
 

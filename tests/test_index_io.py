@@ -301,3 +301,100 @@ def test_raw_encode_matches_aggregated():
         a = [tuple(v) if isinstance(v, list) else v for v in out_raw[col]]
         b = [tuple(v) if isinstance(v, list) else v for v in out_agg[col]]
         assert a == b, col
+
+
+def _shard_rows(rows, with_df=True):
+    """Hand-encoded shard rows: (term, doc ids, tfs, doc lens, df) → the
+    stored columns ``decode_shard_arrays`` reads (first gap absolute)."""
+    import pandas as pd
+
+    out = {"term": [], "n_docs": [], "doc_gaps": [], "tfs": [], "doc_lens": []}
+    if with_df:
+        out["df"] = []
+    for term, ids, tfs, dls, df in rows:
+        ids = np.asarray(ids, dtype=np.uint64)
+        gaps = np.concatenate((ids[:1], np.diff(ids)))
+        out["term"].append(term)
+        out["n_docs"].append(len(ids))
+        out["doc_gaps"].append(varint_encode(gaps))
+        out["tfs"].append(varint_encode(np.asarray(tfs, dtype=np.uint64)))
+        out["doc_lens"].append(varint_encode(np.asarray(dls, dtype=np.uint64)))
+        if with_df:
+            out["df"].append(df)
+    return pd.DataFrame(out)
+
+
+def test_decode_shard_arrays_empty_frame():
+    from hybrid_sanctions_search_engine_spark.sources.index_io import (
+        decode_shard_arrays,
+    )
+
+    empty = _shard_rows([])
+    plain = decode_shard_arrays(empty)
+    assert set(plain) == {"term_codes", "uniq_terms", "doc_id", "tf", "doc_len"}
+    assert all(v.size == 0 for v in plain.values())
+    with_df = decode_shard_arrays(empty, include_df=True)
+    assert set(with_df) == set(plain) | {"df"}
+    assert with_df["df"].dtype == np.int64 and with_df["df"].size == 0
+
+
+def test_decode_shard_arrays_segments_and_term_codes():
+    """Doc ids restart at every row (each row's first gap is absolute),
+    and term codes follow first appearance, not sort order."""
+    from hybrid_sanctions_search_engine_spark.sources.index_io import (
+        decode_shard_arrays,
+    )
+
+    rows = [
+        ("kilo", [3, 5, 9], [1, 2, 1], [10, 11, 12], 5),
+        ("alfa", [2, 7], [4, 1], [20, 21], 2),
+        ("kilo", [70000, 70004], [1, 3], [30, 31], 5),
+        ("echo", [1], [2], [40], 1),
+    ]
+    dec = decode_shard_arrays(_shard_rows(rows), include_df=True)
+    assert dec["doc_id"].tolist() == [3, 5, 9, 2, 7, 70000, 70004, 1]
+    assert dec["uniq_terms"].tolist() == ["kilo", "alfa", "echo"]
+    assert dec["term_codes"].tolist() == [0, 0, 0, 1, 1, 0, 0, 2]
+    assert dec["uniq_terms"][dec["term_codes"]].tolist() == [
+        "kilo", "kilo", "kilo", "alfa", "alfa", "kilo", "kilo", "echo"
+    ]
+    assert dec["tf"].tolist() == [1, 2, 1, 4, 1, 1, 3, 2]
+    assert dec["doc_len"].tolist() == [10, 11, 12, 20, 21, 30, 31, 40]
+    assert dec["df"].tolist() == [5, 5, 5, 2, 2, 5, 5, 1]
+    assert "df" not in decode_shard_arrays(_shard_rows(rows))
+
+
+def test_decode_shard_arrays_inverts_encoder():
+    import pandas as pd
+
+    from hybrid_sanctions_search_engine_spark.sources.index_io import (
+        _encode_posting_frame,
+        decode_shard_arrays,
+    )
+
+    rng = np.random.default_rng(3)
+    n = 400
+    doc_id = rng.integers(0, 5000, size=n)
+    raw = pd.DataFrame(
+        {
+            "term": rng.choice(["x", "yy", "zzz", "w"], size=n),
+            "doc_id": doc_id,
+            "tf": rng.integers(1, 9, size=n),
+            "doc_len": rng.integers(1, 99, size=n),
+        }
+    ).drop_duplicates(["term", "doc_id"])
+    raw["chunk"] = np.right_shift(raw["doc_id"].to_numpy(), 7)
+    encoded, n_postings, _ = _encode_posting_frame(raw, 0, False)
+    dec = decode_shard_arrays(encoded)
+    got = set(
+        zip(
+            dec["uniq_terms"][dec["term_codes"]].tolist(),
+            dec["doc_id"].tolist(),
+            dec["tf"].tolist(),
+            dec["doc_len"].tolist(),
+        )
+    )
+    want = set(
+        raw[["term", "doc_id", "tf", "doc_len"]].itertuples(index=False, name=None)
+    )
+    assert n_postings == len(raw) and got == want
